@@ -46,7 +46,6 @@ from crawler_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
     url_seen_filter,
-    url_seen_filter_cuckoo,
     winnow_fingerprints,
     winnow_near_dup_pairs,
 )
@@ -275,7 +274,7 @@ def q_url_seen_antijoin(spark, sf_dir):
         .select(F.col("o_orderkey").cast("string").alias("url"))
     )
     return (
-        url_seen_filter(spark, cand, seen, bloom=None)
+        url_seen_filter(spark, cand, seen)
         .select("url", "dont_filter")
         .orderBy("url")
     )
@@ -315,7 +314,7 @@ def q_url_seen_cuckoo(spark, sf_dir):
         shards, expired, "url_hash", num_shards=8, num_buckets=nb
     )
     return (
-        url_seen_filter_cuckoo(spark, cand, active, after)
+        url_seen_filter(spark, cand, active, after)
         .select("url", "dont_filter")
         .orderBy("url")
     )

@@ -6,7 +6,7 @@ A from-scratch re-expression of the capabilities of the reference crawler
 - ``functions``  : vectorized scalar kernels (URL canonicalization, hashing,
   fuzzy date parsing, text quality/lang-id) — Arrow-batched, zero per-row
   Python.
-- ``operators``  : set-oriented dataflow stages (URL-seen dedup via bloom
+- ``operators``  : set-oriented dataflow stages (URL-seen dedup via cuckoo
   prefilter + exact anti-join, per-host politeness windows, near-dup
   families, similarity search, reporting joins/aggregations).
 - ``sources``    : table IO (parquet w/ atomic-manifest snapshots standing in

@@ -9,7 +9,7 @@ two verbs:
     python -m crawler_spark list-sites
     python -m crawler_spark crawl [SITE ...] --time EPOCH \\
         --checkpoint DIR [--recrawl|--resume] [--cpus N] \\
-        [--filter-kind bloom|cuckoo] [--autothrottle] [--max-batches N]
+        [--autothrottle] [--max-batches N]
     python -m crawler_spark report --checkpoint DIR [--date YYYY-MM-DD] \\
         [--cpus N]
 
@@ -83,7 +83,6 @@ def cmd_crawl(args) -> int:
         cutoff,
         graph["as_of"],
         args.checkpoint,
-        filter_kind=args.filter_kind,
         autothrottle={} if args.autothrottle else None,
     )
     res = engine.run(
@@ -210,8 +209,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--recrawl", action="store_true",
                    help="new daily pass on an existing checkpoint")
     c.add_argument("--cpus", type=int, default=4)
-    c.add_argument("--filter-kind", choices=("bloom", "cuckoo"),
-                   default="bloom")
     c.add_argument("--autothrottle", action="store_true")
     c.add_argument("--max-batches", type=int, default=1000)
 

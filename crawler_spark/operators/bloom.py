@@ -1,36 +1,33 @@
-"""Partitioned bloom filter over 64-bit URL hashes, built and probed in
-Arrow batches (no JVM extension, no per-row Python).
+"""Fixed-size bloom bitset over 64-bit URL hashes (numpy only).
 
-Replaces the reference's 1-synchronous-MySQL-SELECT-per-URL seen probe
-(reference demo/middlewares.py:50-55) with a set-oriented two-tier check:
-bloom prefilter (this module) kills the common no-hit case cheaply; the
-exact left-anti join (operators/dedup.py) resolves bloom false positives so
-drop decisions are always exact (SURVEY §2.2 D1).
-
-Scale notes: the bitset is built as one partial bitset per partition via
-``mapInArrow`` (map-side, no shuffle) and OR-merged. The merged filter is
-broadcast for probing. At 10^10 URLs you shard the filter by hash prefix
-(``num_shards``) so each executor holds only the shards it probes; locally
-one shard suffices. Double hashing (Kirsch–Mitzenmacher) derives k probe
-positions from one xxhash64, so hashing stays on the JVM side.
+The crawl engine's URL-seen prefilter is the sharded cuckoo filter
+(operators/cuckoo.py): it supports deletion, and the exact left-anti join
+behind it decides every drop. This bitset serves a different job — the
+per-host state of the streaming URL-seen operator (streaming/stream.py),
+which must stay a fixed size, is never deleted from and has no exact join
+behind it. Double hashing (Kirsch–Mitzenmacher) derives k probe positions
+from one xxhash64, so hashing stays on the JVM side.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
+
+
+def _probe_positions(hashes: np.ndarray, num_bits: int, k: int):
+    """Yield the k bit positions (uint64 arrays) of each hash."""
+    h1 = hashes.astype(np.uint64)
+    h2 = (h1 >> np.uint64(17)) | (h1 << np.uint64(47))
+    h2 = h2 * np.uint64(0x9E3779B97F4A7C15) | np.uint64(1)
+    m = np.uint64(num_bits)
+    for i in range(k):
+        yield (h1 + np.uint64(i) * h2) % m
 
 
 class BloomFilter:
-    """Immutable bitset + parameters. ``bits`` is a numpy uint64 array."""
+    """Bitset + parameters. ``bits`` is a numpy uint64 array."""
 
     def __init__(self, bits: np.ndarray, num_hashes: int):
         self.bits = bits
@@ -46,263 +43,17 @@ class BloomFilter:
         k = max(1, round(m / n * math.log(2)))
         return m, min(k, 8)
 
+    def add_np(self, hashes: np.ndarray) -> None:
+        """Set the k bits of every hash, in place."""
+        for idx in _probe_positions(hashes, self.num_bits, self.num_hashes):
+            np.bitwise_or.at(self.bits, (idx >> np.uint64(6)).astype(np.int64),
+                             np.uint64(1) << (idx & np.uint64(63)))
+
     def might_contain_np(self, hashes: np.ndarray) -> np.ndarray:
         """Vectorized probe: bool mask, True = maybe seen (no false negatives)."""
-        h = hashes.astype(np.uint64)
-        h1 = h
-        h2 = (h >> np.uint64(17)) | (h << np.uint64(47))
-        h2 = h2 * np.uint64(0x9E3779B97F4A7C15) | np.uint64(1)
-        out = np.ones(h.shape[0], dtype=bool)
-        m = np.uint64(self.num_bits)
-        for i in range(self.num_hashes):
-            idx = (h1 + np.uint64(i) * h2) % m
+        out = np.ones(hashes.shape[0], dtype=bool)
+        for idx in _probe_positions(hashes, self.num_bits, self.num_hashes):
             word = idx >> np.uint64(6)
             bit = idx & np.uint64(63)
             out &= (self.bits[word] >> bit) & np.uint64(1) != 0
         return out
-
-
-def _set_bits(bits: np.ndarray, hashes: np.ndarray, num_bits: int, k: int) -> None:
-    h = hashes.astype(np.uint64)
-    h1 = h
-    h2 = (h >> np.uint64(17)) | (h << np.uint64(47))
-    h2 = h2 * np.uint64(0x9E3779B97F4A7C15) | np.uint64(1)
-    m = np.uint64(num_bits)
-    for i in range(k):
-        idx = (h1 + np.uint64(i) * h2) % m
-        np.bitwise_or.at(bits, (idx >> np.uint64(6)).astype(np.int64),
-                         np.uint64(1) << (idx & np.uint64(63)))
-
-
-def build_bloom(
-    df: DataFrame,
-    hash_col: str,
-    expected_items: int | None = None,
-    fpp: float = 0.01,
-) -> BloomFilter:
-    """Build a bloom filter over ``df[hash_col]`` (long).
-
-    One partial bitset per partition (mapInArrow, map-side only), OR-merged
-    on the driver — the classic distributed bloom build; merge cost is
-    O(partitions × m/8 bytes), independent of row count.
-    """
-    if expected_items is None:
-        expected_items = df.count()
-    num_bits, k = BloomFilter.sized_for(expected_items, fpp)
-    words = num_bits // 64
-
-    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bits = np.zeros(words, dtype=np.uint64)
-        any_rows = False
-        for b in batches:
-            h = b.column(0).to_numpy(zero_copy_only=False)
-            if h.shape[0]:
-                any_rows = True
-                _set_bits(bits, h, num_bits, k)
-        if any_rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([bits.tobytes()], type=pa.binary())], names=["bits"]
-            )
-
-    partials = (
-        df.select(F.col(hash_col).alias("h"))
-        .mapInArrow(partial, "bits binary")
-        .collect()
-    )
-    bits = np.zeros(words, dtype=np.uint64)
-    for row in partials:
-        bits |= np.frombuffer(row.bits, dtype=np.uint64)
-    return BloomFilter(bits, k)
-
-
-BLOOM_SHARDS_SCHEMA = (
-    "shard int, bits binary, num_hashes int, num_bits long, num_shards int"
-)
-
-
-def _shard_bitsets(
-    df: DataFrame, hash_col: str, num_shards: int, num_bits: int, k: int
-) -> DataFrame:
-    """One bitset per (present) shard with FIXED parameters — the shared
-    kernel of the from-scratch build and the incremental delta build. Fully
-    distributed: groupBy(shard).applyInPandas; each task holds one shard's
-    bitset only."""
-    words = num_bits // 64
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(words, dtype=np.uint64)
-        h = pdf["h"].to_numpy(dtype=np.int64)
-        if h.shape[0]:
-            _set_bits(bits, h, num_bits, k)
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["shard"].iloc[0])],
-                "bits": [bits.tobytes()],
-                "num_hashes": [k],
-                "num_bits": [num_bits],
-                "num_shards": [num_shards],
-            }
-        )
-
-    return (
-        df.select(
-            F.pmod(F.col(hash_col), F.lit(num_shards)).cast("int").alias("shard"),
-            F.col(hash_col).alias("h"),
-        )
-        .groupBy("shard")
-        .applyInPandas(build, BLOOM_SHARDS_SCHEMA)
-    )
-
-
-def sharded_params(
-    num_shards: int, expected_items: int, fpp: float = 0.01
-) -> tuple[int, int]:
-    """(num_bits_per_shard, num_hashes) so the sharded filter's total size
-    matches an unsharded filter for ``expected_items``."""
-    per_shard = max(64, expected_items // num_shards)
-    return BloomFilter.sized_for(per_shard, fpp)
-
-
-def build_bloom_sharded(
-    df: DataFrame,
-    hash_col: str,
-    num_shards: int,
-    expected_items: int | None = None,
-    fpp: float = 0.01,
-) -> DataFrame:
-    """Shard the bloom filter by hash prefix: returns a DataFrame
-    (shard int, bits binary, num_hashes int, num_bits long, num_shards int)
-    with one independent bitset per shard, built fully DISTRIBUTED via
-    groupBy(shard).applyInPandas — no driver-side merge and no single
-    monolithic bitset. At the 10^10-URL design point the unsharded build
-    would materialize a ~12 GB array on the driver (VERDICT r1 'What's
-    wrong #6'); here each executor only ever holds ~(bits/num_shards).
-
-    Shard id = hash mod num_shards; each shard is sized for its expected
-    share, so total memory matches the unsharded filter."""
-    if expected_items is None:
-        expected_items = df.count()
-    num_bits, k = sharded_params(num_shards, expected_items, fpp)
-    return _shard_bitsets(df, hash_col, num_shards, num_bits, k)
-
-
-def merge_bloom_shards(
-    existing: DataFrame,
-    delta: DataFrame,
-    hash_col: str,
-    num_shards: int,
-    num_bits: int,
-    k: int,
-) -> DataFrame:
-    """OR-merge a batch's new hashes into an existing sharded filter —
-    the INCREMENTAL maintenance path (VERDICT r2 'Next round #1'): per
-    batch the work is O(delta hashes + touched-shard bitsets), never a
-    rebuild over the full seen history. Delta bitsets are built with the
-    existing filter's exact parameters, unioned with the stored shard rows,
-    and OR-folded per shard — all distributed, bitwise-identical to a
-    from-scratch build over the union of inputs (OR is commutative)."""
-    delta_shards = _shard_bitsets(delta, hash_col, num_shards, num_bits, k)
-    words = num_bits // 64
-
-    def or_merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(words, dtype=np.uint64)
-        for raw in pdf["bits"]:
-            bits |= np.frombuffer(raw, dtype=np.uint64)
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["shard"].iloc[0])],
-                "bits": [bits.tobytes()],
-                "num_hashes": [k],
-                "num_bits": [num_bits],
-                "num_shards": [num_shards],
-            }
-        )
-
-    return (
-        existing.select("shard", "bits", "num_hashes", "num_bits", "num_shards")
-        .unionByName(delta_shards)
-        .groupBy("shard")
-        .applyInPandas(or_merge, BLOOM_SHARDS_SCHEMA)
-    )
-
-
-def bloom_probe_sharded(
-    candidates: DataFrame,
-    bloom_shards: DataFrame,
-    hash_col: str,
-    num_shards: int | None = None,
-) -> DataFrame:
-    """Probe a sharded bloom filter: candidates are repartitioned by shard
-    and cogrouped with the shard bitsets (Arrow batches), so each task
-    holds exactly ONE shard's bitset — never the whole filter. Returns the
-    candidates with a ``_maybe`` boolean (True = possibly seen; no false
-    negatives). A shard with no bitset row means nothing was ever inserted
-    there → all its candidates are definitely new.
-
-    ``num_shards=None`` derives the modulus from the shard rows themselves
-    (each row records its build-time ``num_shards``); when a caller does
-    pass one, every non-empty cogroup ASSERTS it against the stored value —
-    a mismatched modulus would route candidates to shards that never held
-    their hashes and silently skip the exact anti-join (bloom false
-    negatives → re-fetch of seen URLs)."""
-    from pyspark.sql.types import StructType
-
-    if num_shards is None:
-        row = bloom_shards.select(F.max("num_shards").alias("n")).collect()[0]
-        if row.n is None:
-            # Empty filter: nothing was ever inserted → all candidates new.
-            return candidates.withColumn("_maybe", F.lit(False))
-        num_shards = int(row.n)
-
-    out_schema = StructType(
-        [f for f in candidates.schema.fields]
-    ).add("_maybe", BooleanType())
-    in_cols = [f.name for f in candidates.schema.fields]
-    expected_shards = num_shards
-
-    def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        out = left.drop(columns=["_shard"])
-        if right.empty:
-            out["_maybe"] = False
-            return out
-        stored = int(right["num_shards"].iloc[0])
-        if stored != expected_shards:
-            raise ValueError(
-                f"bloom shard-count mismatch: probe modulus {expected_shards}"
-                f" != build modulus {stored} (would cause false negatives)"
-            )
-        flt = BloomFilter(
-            np.frombuffer(right["bits"].iloc[0], dtype=np.uint64),
-            int(right["num_hashes"].iloc[0]),
-        )
-        out["_maybe"] = flt.might_contain_np(
-            left[hash_col].to_numpy(dtype=np.int64)
-        )
-        return out
-
-    cand = candidates.withColumn(
-        "_shard", F.pmod(F.col(hash_col), F.lit(num_shards)).cast("int")
-    )
-    return (
-        cand.groupBy("_shard")
-        .cogroup(bloom_shards.groupBy("shard"))
-        .applyInPandas(probe, out_schema)
-        .select(*in_cols, "_maybe")
-    )
-
-
-def bloom_probe_col(spark: SparkSession, bloom: BloomFilter, hash_col: str):
-    """Returns a Column: True where the hash *might* be in the set.
-
-    The bitset ships once per executor via SparkContext.broadcast; the probe
-    is a vectorized Arrow pandas UDF over numpy — zero per-row Python.
-    """
-    bc = spark.sparkContext.broadcast((bloom.bits.tobytes(), bloom.num_hashes))
-
-    @pandas_udf(BooleanType())
-    def maybe_seen(h: pd.Series) -> pd.Series:
-        raw, k = bc.value
-        flt = BloomFilter(np.frombuffer(raw, dtype=np.uint64), k)
-        return pd.Series(flt.might_contain_np(h.to_numpy(dtype=np.int64)))
-
-    return maybe_seen(F.col(hash_col))

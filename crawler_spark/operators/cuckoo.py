@@ -1,15 +1,15 @@
-"""Partitioned cuckoo filter over 64-bit URL hashes — the second
-probabilistic URL-seen tier next to the sharded bloom (operators/bloom.py).
+"""Partitioned cuckoo filter over 64-bit URL hashes — the crawl engine's
+URL-seen prefilter (operators/dedup.py ``url_seen_filter``), switched on
+once the seen set reaches ``CrawlEngine.bloom_threshold``.
 
-What the cuckoo buys over the bloom (SURVEY §2.2 D1): **deletion**. A
-bloom bitset can only grow; evicting a URL (recrawl after a TTL, a site
-asking for re-fetch, rolling a retention window at 10^10-URL scale) forces
-a full rebuild. The cuckoo filter stores 16-bit fingerprints in 4-slot
-buckets and supports remove-one-occurrence, so the crawl frontier can
-expire seen-entries incrementally while keeping the no-false-negative
-prefilter contract. Like the bloom tier it is only ever a PREFILTER:
-the exact left-anti join (operators/dedup.py) decides every drop, so
-false positives cost a shuffle row, never correctness.
+Why a cuckoo and not a bloom (SURVEY §2.2 D1): **deletion**. A bloom
+bitset can only grow; evicting a URL (recrawl after a TTL, a site asking
+for re-fetch, rolling a retention window at 10^10-URL scale) forces a full
+rebuild. The cuckoo filter stores 16-bit fingerprints in 4-slot buckets
+and supports remove-one-occurrence, so the crawl frontier can expire
+seen-entries incrementally while keeping the no-false-negative prefilter
+contract. It is only ever a PREFILTER: the exact left-anti join decides
+every drop, so false positives cost a shuffle row, never correctness.
 
 Layout per shard: a ``(num_buckets, 4)`` uint16 table (fingerprint 0 =
 empty slot) plus a tiny overflow stash for eviction-chain failures. A
@@ -20,8 +20,8 @@ counts, so the alternate bucket is computable from (bucket, fp) alone —
 no need to re-derive the original 64-bit hash when relocating entries.
 
 All build/probe math is vectorized numpy inside Arrow batches
-(groupBy(shard).applyInPandas / cogroup — the same fully-distributed
-shard topology as bloom.py: each task only ever holds ONE shard's table).
+(groupBy(shard).applyInPandas / cogroup — fully distributed: each task
+only ever holds ONE shard's table, nothing is collected or broadcast).
 Bulk inserts place ~all items in two vectorized passes (first-choice then
 second-choice bucket, rank-within-bucket slotting); only the residue that
 needs eviction chains walks a per-item loop, bounded by the ≤0.7 build
@@ -226,8 +226,8 @@ def _bulk_place(
 
 
 # ---------------------------------------------------------------------------
-# Sharded (distributed) build / merge / delete / probe — mirrors bloom.py's
-# topology: one row per shard, each task touches exactly one shard.
+# Sharded (distributed) build / merge / delete / probe: one row per shard,
+# each task touches exactly one shard.
 # ---------------------------------------------------------------------------
 
 CUCKOO_SHARDS_SCHEMA = (
@@ -260,8 +260,8 @@ def build_cuckoo_sharded(
 ) -> DataFrame:
     """One cuckoo table per hash-mod shard, built fully distributed via
     groupBy(shard).applyInPandas. Each shard is sized for its expected
-    share of ``expected_items`` at the build load factor; like the bloom
-    build, nothing is collected or broadcast whole."""
+    share of ``expected_items`` at the build load factor; nothing is
+    collected or broadcast whole."""
     if expected_items is None:
         expected_items = df.count()
     num_buckets = CuckooFilter.buckets_for(
@@ -339,8 +339,7 @@ def merge_cuckoo_shards(
     num_buckets: int,
 ) -> DataFrame:
     """Insert a batch's new hashes into the stored shard tables — the
-    incremental maintenance path (same contract as bloom.py
-    merge_bloom_shards, but reversible via delete_cuckoo_shards)."""
+    incremental maintenance path, reversible via delete_cuckoo_shards."""
     return _apply_delta(existing, delta, hash_col, num_shards, num_buckets, "insert")
 
 
@@ -351,8 +350,8 @@ def delete_cuckoo_shards(
     num_shards: int,
     num_buckets: int,
 ) -> DataFrame:
-    """Remove one stored occurrence per deletion hash — the operation the
-    bloom tier cannot do. Used for recrawl eviction: expire URLs from the
+    """Remove one stored occurrence per deletion hash — the operation a
+    bloom cannot do. Used for recrawl eviction: expire URLs from the
     seen-filter without rebuilding it from the full history."""
     return _apply_delta(existing, deletions, hash_col, num_shards, num_buckets, "delete")
 
@@ -368,7 +367,7 @@ def cuckoo_probe_sharded(
     never had an insert → all its candidates are definitely new.
     ``num_shards=None`` derives the modulus from the stored rows; an
     explicit value is asserted against them (a mismatched modulus would
-    silently produce false negatives — same guard as the bloom probe)."""
+    silently produce false negatives)."""
     if num_shards is None:
         row = shards.select(F.max("num_shards").alias("n")).collect()[0]
         if row.n is None:

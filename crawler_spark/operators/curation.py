@@ -736,7 +736,7 @@ def load_fasttext_vec(path: str, keep_label: str = "__label__keep",
     2016): a document's label score is ``mean_g(input[g]) · output[L]``,
     so each feature's scalar contribution is ``input[g] · output[L]`` —
     computed here once at load time against the ``keep_label`` output row
-    and quantized to integer micros (ties-away rounding) so the engine's
+    and quantized to integer micros (half-up rounding) so the engine's
     exact-integer plan is unchanged.  Feature tokens are re-bucketed with
     the ENGINE's hash (md5_long60 % buckets): fastText stores word
     n-grams only as hashed buckets (never as vocabulary strings), so any
@@ -752,7 +752,7 @@ def load_fasttext_vec(path: str, keep_label: str = "__label__keep",
         header = fh.readline().split()
         n, dim = int(header[0]), int(header[1])
         for line in fh:
-            parts = line.rstrip("\n").split(" ")
+            parts = line.split()  # real .vec rows end with a space
             tok, vals = parts[0], [float(x) for x in parts[1:]]
             if len(vals) != dim:
                 raise ValueError(f"bad row for {tok!r}: {len(vals)} dims")

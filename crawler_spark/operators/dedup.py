@@ -2,7 +2,8 @@
 
 1. URL-seen dedup (the crawl engine's defining stage) — replaces the
    reference's per-request MySQL probe (demo/middlewares.py:50-68) with:
-   intra-batch dropDuplicates → bloom prefilter → exact left-anti join.
+   intra-batch dropDuplicates → sharded cuckoo prefilter (once the seen
+   set is large) → exact left-anti join.
    The ``dont_filter`` bypass column mirrors meta['dont_filter']
    (middlewares.py:55; used by demo/已部署/maharashtratimes.py:44-45).
 
@@ -12,7 +13,7 @@
    fingerprint + pigeonhole banding). All signature math is pure JVM
    higher-order expressions — no Python in any hot path.
 
-Scale notes: the anti-join shuffles only bloom-positive candidates (the
+Scale notes: the anti-join shuffles only filter-positive candidates (the
 rare case); LSH band joins shuffle (band_idx, band_hash) keys which are
 uniform by construction, so no skew salting is needed there. Exact-verify
 joins carry shingle arrays only for the candidate pairs, never all pairs.
@@ -29,7 +30,7 @@ from crawler_spark.functions.text import (
     minhash_params,
     shingles_of,
 )
-from crawler_spark.operators.bloom import BloomFilter, bloom_probe_col, build_bloom
+from crawler_spark.operators.cuckoo import cuckoo_probe_sharded
 
 
 # ---------------------------------------------------------------------------
@@ -60,22 +61,27 @@ def url_seen_filter(
     spark: SparkSession,
     candidates: DataFrame,
     url_seen: DataFrame,
-    bloom: BloomFilter | None = None,
+    shards: DataFrame | None = None,
+    num_shards: int | None = None,
 ) -> DataFrame:
     """Drop candidates whose exact ``url`` is in the seen set, honoring the
     ``dont_filter`` bypass (middlewares.py:55).
 
-    Two-tier: bloom-negative rows are *guaranteed* new (no false negatives)
-    and skip the shuffle entirely; only bloom-positive rows reach the exact
-    left-anti join, which resolves bloom false positives. Never drops on
-    bloom evidence alone — parity with the reference's exact string match
-    (middlewares.py:51) is preserved byte-for-byte.
+    Without ``shards`` this is the exact left-anti join alone (the crawl
+    loop's path below its activation threshold). With ``shards`` (the
+    sharded cuckoo filter over the seen set, operators/cuckoo.py) it is
+    two-tier: filter-negative rows are *guaranteed* new (no false
+    negatives) and skip the shuffle entirely; only filter-positive rows
+    reach the exact anti-join, which resolves false positives. Never
+    drops on filter evidence alone — parity with the reference's exact
+    string match (middlewares.py:51) is preserved byte-for-byte.
+    ``num_shards=None`` derives the modulus from the stored shard rows.
     """
     bypass = candidates.filter(F.col("dont_filter"))
     subject = candidates.filter(~F.col("dont_filter"))
 
-    if bloom is not None:
-        maybe = subject.withColumn("_maybe", bloom_probe_col(spark, bloom, "url_hash"))
+    if shards is not None:
+        maybe = cuckoo_probe_sharded(subject, shards, "url_hash", num_shards)
         definitely_new = maybe.filter(~F.col("_maybe")).drop("_maybe")
         suspects = maybe.filter(F.col("_maybe")).drop("_maybe")
     else:
@@ -88,76 +94,6 @@ def url_seen_filter(
     if definitely_new is not None:
         survivors = survivors.unionByName(definitely_new)
     return survivors.unionByName(bypass)
-
-
-def url_seen_bloom(spark: SparkSession, url_seen: DataFrame,
-                   expected_items: int | None = None) -> BloomFilter:
-    """Build the prefilter over the seen set's hashes."""
-    return build_bloom(url_seen, "url_hash", expected_items=expected_items)
-
-
-def _url_seen_filter_prefiltered(
-    candidates: DataFrame,
-    url_seen: DataFrame,
-    probe,
-) -> DataFrame:
-    """The shared two-tier kernel both sharded prefilter tiers run:
-    dont_filter bypass (middlewares.py:55) → ``probe(subject)`` marks
-    ``_maybe`` (False = guaranteed-new, skips the shuffle) → exact
-    left-anti join decides every actual drop. One copy of the semantics,
-    so a fix to the bypass rule or the join shape can never drift between
-    the bloom and cuckoo tiers."""
-    bypass = candidates.filter(F.col("dont_filter"))
-    subject = candidates.filter(~F.col("dont_filter"))
-    maybe = probe(subject)
-    definitely_new = maybe.filter(~F.col("_maybe")).drop("_maybe")
-    suspects = maybe.filter(F.col("_maybe")).drop("_maybe")
-    survivors = suspects.join(
-        url_seen.select("url").distinct(), on="url", how="left_anti"
-    )
-    return survivors.unionByName(definitely_new).unionByName(bypass)
-
-
-def url_seen_filter_sharded(
-    spark: SparkSession,
-    candidates: DataFrame,
-    url_seen: DataFrame,
-    bloom_shards: DataFrame,
-    num_shards: int | None = None,
-) -> DataFrame:
-    """url_seen_filter with a SHARDED bloom prefilter (the 10^10-URL
-    path): bitsets stay distributed end-to-end — built per shard, probed
-    via cogroup, never collected or broadcast whole (bloom.py
-    build_bloom_sharded/bloom_probe_sharded). Semantics are byte-identical
-    to url_seen_filter: bloom only prefilters; the exact left-anti join
-    decides every drop."""
-    from crawler_spark.operators.bloom import bloom_probe_sharded
-
-    return _url_seen_filter_prefiltered(
-        candidates, url_seen,
-        lambda s: bloom_probe_sharded(s, bloom_shards, "url_hash", num_shards),
-    )
-
-
-def url_seen_filter_cuckoo(
-    spark: SparkSession,
-    candidates: DataFrame,
-    url_seen: DataFrame,
-    cuckoo_shards: DataFrame,
-    num_shards: int | None = None,
-) -> DataFrame:
-    """url_seen_filter with a sharded CUCKOO prefilter (operators/cuckoo.py)
-    instead of the bloom — identical two-tier semantics (prefilter only;
-    the exact left-anti join decides every drop), but the filter tier
-    supports DELETION, so recrawl eviction / retention rolls don't force a
-    filter rebuild over the full seen history. Same shard topology as the
-    bloom path: tables stay distributed, probed via cogroup."""
-    from crawler_spark.operators.cuckoo import cuckoo_probe_sharded
-
-    return _url_seen_filter_prefiltered(
-        candidates, url_seen,
-        lambda s: cuckoo_probe_sharded(s, cuckoo_shards, "url_hash", num_shards),
-    )
 
 
 # ---------------------------------------------------------------------------

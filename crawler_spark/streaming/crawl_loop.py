@@ -6,7 +6,7 @@ set. Here each micro-batch is one pass of set-oriented stages:
 
     frontier ──intra-batch dedup──► candidates
              ──anti-join vs scheduled (intra-run dupefilter)──►
-             ──bloom prefilter + exact anti-join vs url_seen──►
+             ──cuckoo prefilter + exact anti-join vs url_seen──►
              ──robots + per-host politeness admission (window)──►
     admitted ──fetch (mock: broadcast join vs site graph)──►
              ──parse (Arrow mapInPandas over the site-parser registry)──►
@@ -24,8 +24,9 @@ URL-seen set, and document set are byte-identical at any parallelism
 Scale posture: dedup joins shuffle on url (uniform); the politeness window
 is two-phase salted (operators/politeness.py) so a mega-host cannot pin a
 partition; the fetch join broadcasts the small side; url_seen/docs are
-append-only delta tables (no O(history) rewrites); bloom probing keeps the
-common-case candidate off the shuffle entirely once the seen set is large.
+append-only delta tables (no O(history) rewrites); the sharded cuckoo
+prefilter keeps the common-case candidate off the shuffle entirely once the
+seen set is large, and deletes evicted URLs in place (evict_urls).
 """
 
 from __future__ import annotations
@@ -41,16 +42,13 @@ from pyspark.sql import functions as F
 
 from crawler_spark.functions.identity import ua_pick_col
 from crawler_spark.functions.urlnorm import canonicalize_col, host_of
-from crawler_spark.operators.bloom import (
-    build_bloom_sharded,
-    merge_bloom_shards,
-    sharded_params,
+from crawler_spark.operators.cuckoo import (
+    CuckooFilter,
+    build_cuckoo_sharded,
+    delete_cuckoo_shards,
+    merge_cuckoo_shards,
 )
-from crawler_spark.operators.dedup import (
-    intra_batch_dedup,
-    url_seen_filter,
-    url_seen_filter_sharded,
-)
+from crawler_spark.operators.dedup import intra_batch_dedup, url_seen_filter
 from crawler_spark.operators.politeness import (
     AUTOTHROTTLE_MAX_DELAY,
     AUTOTHROTTLE_MIN_DELAY,
@@ -82,7 +80,16 @@ FRONTIER_COLS = [
 # differ only in body (S5), so intra-run dedup keys on all three.
 REQUEST_FP_COLS = ("url", "method", "body")
 
+# Hash-mod shard count of the URL-seen cuckoo filter.
+FILTER_SHARDS = 32
+
+
 class CrawlEngine:
+    # The URL-seen prefilter tier: names its checkpoint part and manifest
+    # key. The sharded cuckoo (operators/cuckoo.py) is the only tier — it
+    # prefilters like a bloom but can also DELETE, which evict_urls needs.
+    filter_kind = "cuckoo"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -94,13 +101,10 @@ class CrawlEngine:
         checkpoint_dir: str,
         robots: DataFrame | None = None,
         batch_seconds: float = 1.0,
-        use_bloom: bool | None = None,
         base_epoch: float = 1622505600.0,  # 2021-06-01 UTC: cole_time anchor
         compact_every: int = 8,  # compact checkpoint deltas every k batches
-        bloom_shards_n: int = 32,  # shard count of the sharded URL-seen bloom
-        bloom_threshold: int = 4096,  # auto-enable bloom above this |url_seen|
+        bloom_threshold: int = 4096,  # enable the URL-seen filter at this |url_seen|
         fetcher=None,  # Fetcher seam; default MockWebFetcher(site_graph)
-        filter_kind: str = "bloom",  # URL-seen prefilter tier: bloom | cuckoo
         autothrottle: dict | None = None,  # W4: {} = Scrapy defaults; None = off
         authority: DataFrame | None = None,  # (host, rank_micro) priority mass
         host_budgets: DataFrame | None = None,  # (host, budget) admission cap
@@ -127,18 +131,12 @@ class CrawlEngine:
             else spark.createDataFrame([], ROBOTS_SCHEMA)
         )
         self.batch_seconds = batch_seconds
-        self.use_bloom = use_bloom
         self.base_epoch = base_epoch
         self.compact_every = compact_every
-        self.bloom_shards_n = bloom_shards_n
+        # The filter tier switches on once this many URLs have been seen
+        # (0 = from the first batch); below it the exact anti-join alone
+        # is cheaper than any filter maintenance.
         self.bloom_threshold = bloom_threshold
-        if filter_kind not in ("bloom", "cuckoo"):
-            raise ValueError(f"filter_kind must be bloom|cuckoo, got {filter_kind}")
-        # "cuckoo" swaps the prefilter tier for the deletable cuckoo filter
-        # (operators/cuckoo.py) — identical two-tier drop semantics (the
-        # exact anti-join still decides), but seen-entries can be EVICTED
-        # incrementally (recrawl TTLs) without a filter rebuild.
-        self.filter_kind = filter_kind
         # W4 AutoThrottle (settings.py:72-82, commented out in the reference
         # with these defaults): when a dict is passed, per-host delays adapt
         # to observed response latency — admission uses max(robots/static
@@ -158,9 +156,9 @@ class CrawlEngine:
                 "min_delay": autothrottle.get(
                     "min_delay", AUTOTHROTTLE_MIN_DELAY),
             }
-        # Sharded-bloom maintenance state: parameters of the live filter
+        # URL-seen filter maintenance state: parameters of the live filter
         # (None until first build / restored from the manifest on resume).
-        self._bloom_params: dict | None = None
+        self._filter_params: dict | None = None
         # First batch of the CURRENT run: the intra-run dupefilter
         # (Scrapy's RFPDupeFilter) resets every `scrapy crawl` invocation,
         # so on a recrawl pass the scheduled-set check must only see this
@@ -326,9 +324,9 @@ class CrawlEngine:
             ).select(*REQUEST_FP_COLS)
         )
 
-    def _bloom_state(self, prev_batch: int, url_seen: DataFrame,
-                     seen_count: int) -> DataFrame:
-        """The sharded URL-seen bloom as of ``prev_batch``.
+    def _filter_state(self, prev_batch: int, url_seen: DataFrame,
+                      seen_count: int) -> DataFrame:
+        """The sharded URL-seen cuckoo filter as of ``prev_batch``.
 
         Steady state reads the stored shard rows (one snapshot, maintained
         INCREMENTALLY by ``run_batch`` — per-batch cost is O(delta), never
@@ -341,36 +339,18 @@ class CrawlEngine:
         if prev_batch >= 0 and self.ckpt.has_part(prev_batch, kind):
             params = self.ckpt.stats(prev_batch).get(kind)
         if params is not None and seen_count <= params["capacity"]:
-            self._bloom_params = params
+            self._filter_params = params
             return self.ckpt.read_part(prev_batch, kind)
         capacity = max(4 * max(seen_count, 1), 4 * self.bloom_threshold)
-        if kind == "cuckoo":
-            from crawler_spark.operators.cuckoo import (
-                CuckooFilter,
-                build_cuckoo_sharded,
-            )
-
-            num_buckets = CuckooFilter.buckets_for(
-                max(1, capacity // self.bloom_shards_n)
-            )
-            self._bloom_params = {
-                "num_shards": self.bloom_shards_n,
-                "num_buckets": num_buckets,
-                "capacity": capacity,
-            }
-            return build_cuckoo_sharded(
-                url_seen, "url_hash", self.bloom_shards_n,
-                expected_items=capacity,
-            )
-        num_bits, k = sharded_params(self.bloom_shards_n, capacity)
-        self._bloom_params = {
-            "num_shards": self.bloom_shards_n,
-            "num_bits": num_bits,
-            "num_hashes": k,
+        self._filter_params = {
+            "num_shards": FILTER_SHARDS,
+            "num_buckets": CuckooFilter.buckets_for(
+                max(1, capacity // FILTER_SHARDS)
+            ),
             "capacity": capacity,
         }
-        return build_bloom_sharded(
-            url_seen, "url_hash", self.bloom_shards_n, expected_items=capacity
+        return build_cuckoo_sharded(
+            url_seen, "url_hash", FILTER_SHARDS, expected_items=capacity
         )
 
     # -- parse stage -----------------------------------------------------------
@@ -504,35 +484,21 @@ class CrawlEngine:
             )
         cands = cands.unionByName(fresh_df)
         seen_count = self._seen_total
-        bloom_on = (
-            self.use_bloom
-            if self.use_bloom is not None
-            else seen_count >= self.bloom_threshold
-        )
-        # DEFAULT dedup path above the threshold: SHARDED bloom prefilter
-        # (distributed build/probe/merge, bloom.py) + exact anti-join —
-        # no driver-merged bitset anywhere in the loop (VERDICT r2 'What's
-        # wrong #1' / 'Next round #1'). Below the threshold the exact
-        # anti-join alone is cheaper than any filter maintenance.
+        filter_on = seen_count >= self.bloom_threshold
+        # Above the threshold: SHARDED cuckoo prefilter (distributed
+        # build/probe/merge, cuckoo.py) + exact anti-join — no filter is
+        # ever collected or broadcast whole. Below it: the exact anti-join
+        # alone.
         # Persisted: referenced by the downstream pipeline AND the per-host
         # dedup metrics (A4) — without the persist the dedup chain runs twice.
-        if bloom_on:
-            bloom_shards = self._bloom_state(b - 1, url_seen, seen_count).persist()
-            if self.filter_kind == "cuckoo":
-                from crawler_spark.operators.dedup import url_seen_filter_cuckoo
-
-                dedup_out = url_seen_filter_cuckoo(
-                    spark, cands, url_seen, bloom_shards,
-                    self._bloom_params["num_shards"],
-                ).persist()
-            else:
-                dedup_out = url_seen_filter_sharded(
-                    spark, cands, url_seen, bloom_shards,
-                    self._bloom_params["num_shards"],
-                ).persist()
-        else:
-            bloom_shards = None
-            dedup_out = url_seen_filter(spark, cands, url_seen, None).persist()
+        shards = (
+            self._filter_state(b - 1, url_seen, seen_count).persist()
+            if filter_on else None
+        )
+        dedup_out = url_seen_filter(
+            spark, cands, url_seen, shards,
+            self._filter_params["num_shards"] if filter_on else None,
+        ).persist()
         # A4 honest dedup accounting: candidates dropped per host by the
         # three dedup tiers (intra-batch, intra-run, URL-seen) this batch —
         # measured, not fabricated (VERDICT r1 'What's wrong #5').
@@ -578,8 +544,8 @@ class CrawlEngine:
         if cands.count() == 0:
             cands.unpersist()
             dedup_out.unpersist()
-            if bloom_shards is not None:
-                bloom_shards.unpersist()
+            if shards is not None:
+                shards.unpersist()
             return None
         admitted, deferred = admit_per_host(
             cands, self.batch_seconds, host_budgets=self.host_budgets
@@ -723,28 +689,20 @@ class CrawlEngine:
                 min_delay=at["min_delay"],
                 max_delay=at["max_delay"],
             )
-        if bloom_on:
+        if filter_on:
             # Incremental filter maintenance: fold this batch's new seen
             # hashes into the stored shard state — O(delta) work, committed
             # atomically WITH the docs delta so filter state can never run
             # ahead of (or behind) the seen set across a crash.
-            p = self._bloom_params
-            delta_hashes = docs_delta.select(
-                F.xxhash64(canonicalize_col(F.col("request_url")))
-                .alias("url_hash")
+            p = self._filter_params
+            parts[self.filter_kind] = merge_cuckoo_shards(
+                shards,
+                docs_delta.select(
+                    F.xxhash64(canonicalize_col(F.col("request_url")))
+                    .alias("url_hash")
+                ),
+                "url_hash", p["num_shards"], p["num_buckets"],
             )
-            if self.filter_kind == "cuckoo":
-                from crawler_spark.operators.cuckoo import merge_cuckoo_shards
-
-                parts["cuckoo"] = merge_cuckoo_shards(
-                    bloom_shards, delta_hashes, "url_hash",
-                    p["num_shards"], p["num_buckets"],
-                )
-            else:
-                parts["bloom"] = merge_bloom_shards(
-                    bloom_shards, delta_hashes, "url_hash",
-                    p["num_shards"], p["num_bits"], p["num_hashes"],
-                )
         # All remaining per-batch actions — the stats counts (over
         # persisted inputs) and every part write — are independent Spark
         # jobs; one driver-thread pool runs them concurrently, so batch
@@ -767,12 +725,12 @@ class CrawlEngine:
             # crash-resume of a recrawl pass keeps the per-run reset.
             "run_start": self._run_start_batch,
         }
-        if bloom_on:
-            stats[self.filter_kind] = self._bloom_params
+        if filter_on:
+            stats[self.filter_kind] = self._filter_params
         self.ckpt.finalize(b, stats)
-        if bloom_on:
+        if filter_on:
             # Only the newest committed snapshot is ever read back
-            # (_bloom_state reads prev_batch); older full-filter copies
+            # (_filter_state reads prev_batch); older full-filter copies
             # would accumulate O(batches × filter_size) on disk.
             self.ckpt.prune_part(self.filter_kind, b)
         if self.autothrottle is not None:
@@ -780,8 +738,8 @@ class CrawlEngine:
         self._seen_total += n_docs
         for df in (dedup_out, cands, admitted, fetched, parsed, docs_delta):
             df.unpersist()
-        if bloom_shards is not None:
-            bloom_shards.unpersist()
+        if shards is not None:
+            shards.unpersist()
         return self.ckpt.read_part(b, "frontier")
 
     # -- eviction (retention rolls / forced recrawl) ----------------------------
@@ -792,12 +750,11 @@ class CrawlEngine:
         append-only: eviction is an append to the side log the seen-set
         projection subtracts (checkpoint.read_evictions).
 
-        With the cuckoo tier active, the stored filter shards are also
-        updated in place via per-fingerprint DELETION (the capability the
-        bloom tier lacks) — no rebuild over the full history. With the
-        bloom tier nothing is deleted; the now-stale maybe-positives cost
-        one exact-anti-join row each and never correctness (the exact join
-        is always authoritative). Returns the number of URLs evicted.
+        When the URL-seen cuckoo filter is active, its stored shards are
+        also updated in place via per-fingerprint DELETION — no rebuild
+        over the full history. Below the activation threshold there is no
+        filter to update. Either way the exact anti-join stays
+        authoritative. Returns the number of URLs evicted.
 
         ``urls``: any DataFrame with a ``url`` column. Only URLs actually
         in the current seen set are evicted (and only their hashes deleted
@@ -820,23 +777,18 @@ class CrawlEngine:
         if n == 0:
             ev.unpersist()
             return 0
-        if (
-            last is not None
-            and self.filter_kind == "cuckoo"
-            and self.ckpt.has_part(last, "cuckoo")
-        ):
-            from crawler_spark.operators.cuckoo import delete_cuckoo_shards
-
-            p = self.ckpt.stats(last)["cuckoo"]
+        kind = self.filter_kind
+        if last is not None and self.ckpt.has_part(last, kind):
+            p = self.ckpt.stats(last)[kind]
             # NOTE on duplicates: a URL stored k times (multiset docs)
             # inserted k fingerprint copies; one delete leaves k-1 —
             # a stale maybe-positive, which the exact join resolves.
             updated = delete_cuckoo_shards(
-                self.ckpt.read_part(last, "cuckoo"),
+                self.ckpt.read_part(last, kind),
                 ev.select("url_hash"),
                 "url_hash", p["num_shards"], p["num_buckets"],
             )
-            self.ckpt.replace_part(last, "cuckoo", updated)
+            self.ckpt.replace_part(last, kind, updated)
         self.ckpt.append_evictions(ev)
         ev.unpersist()
         return n

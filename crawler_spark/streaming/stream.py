@@ -16,6 +16,11 @@ them with real Structured Streaming jobs. Two such jobs live here:
    the set of url hashes seen so far; each micro-batch emits
    (host, batch_new, total_seen). State survives restarts through the
    checkpoint — the streaming twin of the engine's checkpointed seen set.
+   Past a per-host ceiling the state becomes a fixed-size bloom bitset
+   (operators/bloom.py), not the engine's deletable cuckoo tier: this
+   state is never deleted from, and a cuckoo table (16-bit slots at 0.7
+   load, power-of-two bucket counts) would take 2.4–4.8× the bits of a
+   1%-FP bloom.
 
 Both run with ``Trigger.AvailableNow`` in tests: process everything
 available, commit the checkpoint, stop — so tests are deterministic and a
@@ -61,10 +66,10 @@ SEEN_OUTPUT_SCHEMA = StructType(
 # State: exact hash set while small, bloom bitset beyond EXACT_STATE_MAX.
 # The exact form keeps the test oracle trivial at fixture scale; the bloom
 # form bounds per-host state at O(filter bits) no matter how many URLs the
-# host accumulates — the same two-tier posture as the batch engine's
-# URL-seen path (operators/bloom.py), minus the exact anti-join (a
-# streaming dashboard count tolerates the bloom's FP undercount; the
-# BATCH dedup path never drops on bloom evidence alone).
+# host accumulates. There is no exact anti-join behind it: a streaming
+# dashboard count tolerates the bloom's FP undercount, while the batch
+# engine's URL-seen path (cuckoo prefilter + exact anti-join) never drops
+# on filter evidence alone.
 SEEN_STATE_SCHEMA = StructType(
     [
         StructField("hashes", ArrayType(LongType())),  # exact tier (small)
@@ -138,7 +143,7 @@ def _make_seen_update(exact_max: int):
     ) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from crawler_spark.operators.bloom import BloomFilter, _set_bits
+        from crawler_spark.operators.bloom import BloomFilter
 
         (host,) = key
         hashes_st, bits_hex, count = (
@@ -162,11 +167,11 @@ def _make_seen_update(exact_max: int):
                 fresh_arr = arr[~flt.might_contain_np(arr)]
                 new_count += int(fresh_arr.shape[0])
                 if fresh_arr.shape[0]:
-                    _set_bits(bits, fresh_arr, num_bits, k)
+                    flt.add_np(fresh_arr)
         if bits is None and len(seen) > exact_max:
             # Convert once: fold the exact set into the fixed-size bitset.
             bits = np.zeros(words, dtype=np.uint64)
-            _set_bits(bits, np.fromiter(seen, dtype=np.int64), num_bits, k)
+            BloomFilter(bits, k).add_np(np.fromiter(seen, dtype=np.int64))
             seen = set()
         total = count + new_count
         if bits is None:

@@ -1,152 +1,60 @@
-"""Bloom prefilter invariants (SURVEY §7.4): ZERO false negatives ever;
-false-positive rate within a sane bound of the configured fpp."""
+"""BloomFilter kernel invariants (the streaming URL-seen state's bitset):
+ZERO false negatives ever; false-positive rate within a sane bound of the
+configured fpp; bits independent of how and when the inserts are split."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
-from crawler_spark.operators.bloom import bloom_probe_col, build_bloom
+from crawler_spark.operators.bloom import BloomFilter
 
 
-def test_no_false_negatives_and_fp_bound(spark):
+def _hashes(seed: int, n: int) -> np.ndarray:
+    return np.random.RandomState(seed).randint(
+        -(2**63), 2**63 - 1, size=n, dtype=np.int64
+    )
+
+
+def _empty(n: int, fpp: float = 0.01) -> BloomFilter:
+    num_bits, k = BloomFilter.sized_for(n, fpp)
+    return BloomFilter(np.zeros(num_bits // 64, dtype=np.uint64), k)
+
+
+def test_no_false_negatives_and_fp_bound():
     n = 5000
-    members = spark.range(n).select(F.xxhash64("id").alias("h"))
-    bloom = build_bloom(members, "h", expected_items=n, fpp=0.01)
+    members = _hashes(1, n)
+    flt = _empty(n)
+    flt.add_np(members)
 
     # every member must probe positive
-    probed = members.select(bloom_probe_col(spark, bloom, "h").alias("m"))
-    assert probed.filter(~F.col("m")).count() == 0
+    assert flt.might_contain_np(members).all()
 
     # non-members: FP rate near fpp (generous 5x bound for small samples)
-    non = spark.range(n, 3 * n).select(F.xxhash64("id").alias("h"))
-    fp = non.select(bloom_probe_col(spark, bloom, "h").alias("m")).filter(
-        F.col("m")
-    ).count()
-    assert fp / (2 * n) < 0.05
+    non = np.setdiff1d(_hashes(2, 2 * n), members)
+    assert flt.might_contain_np(non).mean() < 0.05
 
 
-def test_partitioned_build_matches_single_partition(spark):
-    df = spark.range(2000).select(F.xxhash64("id").alias("h"))
-    b_many = build_bloom(df.repartition(8), "h", expected_items=2000)
-    b_one = build_bloom(df.coalesce(1), "h", expected_items=2000)
-    assert np.array_equal(b_many.bits, b_one.bits)
-    assert b_many.num_hashes == b_one.num_hashes
+def test_partitioned_build_matches_single_partition():
+    """Adding the hashes in 8 chunks into separate bitsets and OR-ing them
+    gives the same bits as one add — the streaming state may fold a host's
+    URLs in over any number of micro-batches."""
+    h = _hashes(3, 2000)
+    one = _empty(2000)
+    one.add_np(h)
+    merged = np.zeros_like(one.bits)
+    for chunk in np.array_split(h, 8):
+        part = _empty(2000)
+        part.add_np(chunk)
+        merged |= part.bits
+    assert np.array_equal(merged, one.bits)
+    assert one.bits.any()
 
 
-def test_sharded_probe_no_false_negatives(spark):
-    """The 10^10-scale seam: per-shard bitsets built distributed (no
-    driver merge), probed via cogroup. Invariants: every member probes
-    positive in the sharded filter too, and FP rate stays bounded."""
-    from crawler_spark.operators.bloom import (
-        bloom_probe_sharded,
-        build_bloom_sharded,
-    )
-
-    n, shards = 5000, 4
-    members = spark.range(n).select(F.xxhash64("id").alias("url_hash"))
-    bl = build_bloom_sharded(members, "url_hash", num_shards=shards,
-                             expected_items=n, fpp=0.01)
-    assert bl.count() == shards
-
-    pos = bloom_probe_sharded(members, bl, "url_hash", shards)
-    assert pos.filter(~F.col("_maybe")).count() == 0
-
-    non = spark.range(n, 3 * n).select(F.xxhash64("id").alias("url_hash"))
-    fp = bloom_probe_sharded(non, bl, "url_hash", shards).filter(
-        F.col("_maybe")
-    ).count()
-    assert fp / (2 * n) < 0.05
-
-
-def test_incremental_merge_matches_from_scratch(spark):
-    """merge_bloom_shards (the crawl loop's per-batch maintenance path)
-    must be BITWISE identical to a from-scratch build over the union —
-    OR is commutative, parameters are pinned, so the shard bitsets agree
-    exactly."""
-    from crawler_spark.operators.bloom import (
-        build_bloom_sharded,
-        merge_bloom_shards,
-        sharded_params,
-    )
-
-    shards, capacity = 4, 4000
-    num_bits, k = sharded_params(shards, capacity)
-    base = spark.range(1000).select(F.xxhash64("id").alias("url_hash"))
-    d1 = spark.range(1000, 1600).select(F.xxhash64("id").alias("url_hash"))
-    d2 = spark.range(1600, 2000).select(F.xxhash64("id").alias("url_hash"))
-
-    inc = build_bloom_sharded(base, "url_hash", shards, expected_items=capacity)
-    for d in (d1, d2):
-        inc = merge_bloom_shards(inc, d, "url_hash", shards, num_bits, k)
-
-    full = build_bloom_sharded(
-        spark.range(2000).select(F.xxhash64("id").alias("url_hash")),
-        "url_hash", shards, expected_items=capacity,
-    )
-    got = {r.shard: (r.bits, r.num_hashes, r.num_bits) for r in inc.collect()}
-    want = {r.shard: (r.bits, r.num_hashes, r.num_bits) for r in full.collect()}
-    assert got == want
-    assert len(got) == shards
-
-
-def test_probe_shard_count_mismatch_raises(spark):
-    """A probe modulus that disagrees with the build modulus must fail
-    loudly instead of silently producing bloom false negatives (ADVICE r2
-    #1)."""
-    import pytest
-
-    from crawler_spark.operators.bloom import (
-        bloom_probe_sharded,
-        build_bloom_sharded,
-    )
-
-    members = spark.range(500).select(F.xxhash64("id").alias("url_hash"))
-    bl = build_bloom_sharded(members, "url_hash", num_shards=4,
-                             expected_items=500)
-    with pytest.raises(Exception, match="shard-count mismatch"):
-        bloom_probe_sharded(members, bl, "url_hash", 8).filter(
-            ~F.col("_maybe")
-        ).count()
-
-
-def test_probe_derives_num_shards(spark):
-    """num_shards=None derives the modulus from the stored shard rows —
-    callers cannot desynchronize what they never supply."""
-    from crawler_spark.operators.bloom import (
-        bloom_probe_sharded,
-        build_bloom_sharded,
-    )
-
-    members = spark.range(500).select(F.xxhash64("id").alias("url_hash"))
-    bl = build_bloom_sharded(members, "url_hash", num_shards=4,
-                             expected_items=500)
-    pos = bloom_probe_sharded(members, bl, "url_hash")
-    assert pos.filter(~F.col("_maybe")).count() == 0
-
-
-def test_sharded_url_seen_filter_matches_unsharded(spark):
-    """url_seen_filter_sharded must produce the exact survivor set of the
-    unsharded (and bloom-less) paths — bloom is a prefilter either way;
-    the exact anti-join decides (num_shards > 1, VERDICT r1 #10)."""
-    from crawler_spark.functions.urlnorm import canonicalize_col
-    from crawler_spark.operators.bloom import build_bloom_sharded
-    from crawler_spark.operators.dedup import (
-        url_seen_filter,
-        url_seen_filter_sharded,
-    )
-
-    seen = spark.createDataFrame(
-        [(f"http://s/{i}",) for i in range(400)], "url string"
-    ).withColumn("url_hash", F.xxhash64(canonicalize_col(F.col("url"))))
-    cands = spark.createDataFrame(
-        [(f"http://s/{i}", i % 17 == 0, f"{i:05d}") for i in range(300, 700)],
-        "url string, dont_filter boolean, seq string",
-    ).withColumn("url_hash", F.xxhash64(canonicalize_col(F.col("url"))))
-
-    plain = {r.url for r in
-             url_seen_filter(spark, cands, seen, bloom=None).collect()}
-    bl = build_bloom_sharded(seen, "url_hash", num_shards=4,
-                             expected_items=400)
-    sharded = {r.url for r in
-               url_seen_filter_sharded(spark, cands, seen, bl, 4).collect()}
-    assert sharded == plain
-    assert plain  # non-degenerate fixture
+def test_incremental_merge_matches_from_scratch():
+    """Adding a base set and then two deltas in place gives the bits of
+    one add over the union — the streaming state's per-trigger update."""
+    h = _hashes(4, 2000)
+    inc = _empty(2000)
+    for part in (h[:1000], h[1000:1600], h[1600:]):
+        inc.add_np(part)
+    full = _empty(2000)
+    full.add_np(h)
+    assert np.array_equal(inc.bits, full.bits)

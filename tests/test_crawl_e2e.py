@@ -22,7 +22,7 @@ from crawler_spark.streaming.crawl_loop import CrawlEngine
 
 
 def _run_engine(spark, graph, ckpt_dir, resume=False, max_batches=1000,
-                use_bloom=None, compact_every=0, **kw):
+                compact_every=0, **kw):
     eng = CrawlEngine(
         spark,
         site_graph=site_graph_df(spark, graph),
@@ -31,7 +31,6 @@ def _run_engine(spark, graph, ckpt_dir, resume=False, max_batches=1000,
         cutoff_epoch=graph["cutoff_epoch"],
         as_of=AS_OF,
         checkpoint_dir=str(ckpt_dir),
-        use_bloom=use_bloom,
         compact_every=compact_every,
         **kw,
     )
@@ -194,64 +193,14 @@ def test_prioritized_crawl_matches_simulator(spark, graph, sim,
     assert sim_p["batches"] > sim["batches"]  # budget caps defer fetches
 
 
-def test_crawl_with_bloom_identical(spark, graph, sim, tmp_path_factory,
-                                    monkeypatch):
-    """Forcing the bloom prefilter on must not change any outcome —
-    bloom is a prefilter, the exact anti-join decides (SURVEY §7.4).
-    The active path must be the SHARDED one end-to-end: the driver-merged
-    build (build_bloom's whole-bitset collect) is poisoned for the whole
-    run (VERDICT r2 'Next round #1')."""
-    import crawler_spark.operators.bloom as bloom_mod
-    import crawler_spark.operators.dedup as dedup_mod
-
-    def _poisoned(*a, **k):
-        raise AssertionError(
-            "driver-merged build_bloom must not run in the crawl loop"
-        )
-
-    monkeypatch.setattr(bloom_mod, "build_bloom", _poisoned)
-    monkeypatch.setattr(dedup_mod, "build_bloom", _poisoned)
-
-    ckpt = tmp_path_factory.mktemp("ckpt_bloom")
-    eng, res = _run_engine(spark, graph, ckpt, use_bloom=True)
-    assert _engine_log(res) == sim["crawl_log"]
-    assert {r.url for r in res["url_seen"].collect()} == sim["url_seen"]
-
-    # The incrementally-maintained shard bitsets must equal a from-scratch
-    # distributed build over the final seen set, bit for bit.
-    from crawler_spark.operators.bloom import build_bloom_sharded
-
-    last = eng.ckpt.last_complete_batch()
-    assert eng.ckpt.has_part(last, "bloom")
-    p = eng.ckpt.stats(last)["bloom"]
-    stored = {
-        r.shard: r.bits for r in eng.ckpt.read_part(last, "bloom").collect()
-    }
-    scratch = {
-        r.shard: r.bits
-        for r in build_bloom_sharded(
-            res["url_seen"], "url_hash", p["num_shards"],
-            expected_items=p["capacity"],
-        ).collect()
-    }
-    assert stored == scratch
-    assert stored  # non-degenerate
-    # Snapshot pruning: only the newest committed batch keeps a filter
-    # copy (_bloom_state only ever reads prev_batch); stale copies would
-    # accumulate O(batches × filter_size) on disk.
-    assert [b for b in range(last + 1)
-            if eng.ckpt.has_part(b, "bloom")] == [last]
-
-
 def test_crawl_with_cuckoo_identical(spark, graph, sim, tmp_path_factory):
-    """filter_kind='cuckoo' swaps the prefilter tier for the deletable
-    cuckoo filter (operators/cuckoo.py); like bloom it only prefilters —
-    the exact anti-join decides — so EVERY outcome must be byte-identical
-    to the reference simulator: crawl log order, URL-seen set, doc set."""
+    """Forcing the URL-seen cuckoo filter on from the first batch
+    (bloom_threshold=0) must not change any outcome — it only prefilters,
+    the exact anti-join decides (SURVEY §7.4) — so EVERY outcome must be
+    byte-identical to the reference simulator: crawl log order, URL-seen
+    set, doc set."""
     ckpt = tmp_path_factory.mktemp("ckpt_cuckoo")
-    eng, res = _run_engine(
-        spark, graph, ckpt, use_bloom=True, filter_kind="cuckoo"
-    )
+    eng, res = _run_engine(spark, graph, ckpt, bloom_threshold=0)
     assert _engine_log(res) == sim["crawl_log"]
     assert {r.url for r in res["url_seen"].collect()} == sim["url_seen"]
     assert _engine_docs(res) == _sim_docs(sim)
@@ -269,33 +218,68 @@ def test_crawl_with_cuckoo_identical(spark, graph, sim, tmp_path_factory):
     import pyspark.sql.functions as SF
 
     assert probed.filter(~SF.col("_maybe")).count() == 0
+    # Snapshot pruning: only the newest committed batch keeps a filter
+    # copy (_filter_state only ever reads prev_batch); stale copies would
+    # accumulate O(batches × filter_size) on disk.
+    assert [b for b in range(last + 1)
+            if eng.ckpt.has_part(b, "cuckoo")] == [last]
 
 
-def test_bloom_auto_activates_and_stays_sharded(spark, tmp_path_factory,
-                                                monkeypatch):
-    """With the default auto mode, once |url_seen| crosses the threshold
-    the engine switches to the sharded bloom mid-run (building once from
-    the seen set, then maintaining incrementally) — and never touches the
-    driver-merged path. Parity must hold across the activation boundary."""
-    import crawler_spark.operators.bloom as bloom_mod
+def test_filter_kind_is_not_an_option(spark, graph, tmp_path_factory):
+    """The cuckoo is the only URL-seen prefilter: no constructor knob
+    selects another tier."""
+    with pytest.raises(TypeError):
+        _run_engine(spark, graph, tmp_path_factory.mktemp("ckpt_kind"),
+                    filter_kind="cuckoo")
+    assert CrawlEngine.filter_kind == "cuckoo"
 
-    monkeypatch.setattr(
-        bloom_mod, "build_bloom",
-        lambda *a, **k: (_ for _ in ()).throw(AssertionError("driver merge")),
-    )
+
+def test_bloom_auto_activates_and_stays_sharded(spark, tmp_path_factory):
+    """Once |url_seen| crosses ``bloom_threshold`` the engine switches the
+    sharded cuckoo filter on mid-run (building once from the seen set,
+    then maintaining incrementally). Parity must hold across the
+    activation boundary."""
     g = build_site_graph(n_sites=3, cats_per_site=2, pages_per_cat=2,
                          entries_per_page=4, dup_fraction=0.3, seed=17)
     s = simulate_crawl(g)
     ckpt = tmp_path_factory.mktemp("ckpt_auto")
     # Threshold low enough that activation happens mid-crawl.
-    eng, res = _run_engine(spark, g, ckpt, use_bloom=None, bloom_threshold=10)
+    eng, res = _run_engine(spark, g, ckpt, bloom_threshold=10)
     assert _engine_log(res) == s["crawl_log"]
     assert {r.url for r in res["url_seen"].collect()} == s["url_seen"]
     assert _engine_docs(res) == _sim_docs(s)
     last = eng.ckpt.last_complete_batch()
-    assert eng.ckpt.has_part(last, "bloom")  # sharded state was maintained
+    with_filter = [b for b in range(last + 1)
+                   if "cuckoo" in eng.ckpt.stats(b)]
+    assert with_filter and with_filter[0] > 0  # switched on mid-run
+    assert with_filter == list(range(with_filter[0], last + 1))
     assert [b for b in range(last + 1)
-            if eng.ckpt.has_part(b, "bloom")] == [last]  # pruned history
+            if eng.ckpt.has_part(b, "cuckoo")] == [last]  # pruned history
+
+
+def test_filter_activates_on_resume(spark, graph, sim, tmp_path_factory):
+    """A checkpoint with no stored filter (written below the threshold —
+    or by an engine whose filter tier was a bloom) resumed by an engine
+    whose threshold is already crossed builds the cuckoo filter from the
+    seen set once, then maintains it; the crawl stays byte-identical to
+    the simulator. The first two batches fetch menus and lists only, so
+    the prefix runs three to store documents before the resume."""
+    ckpt = tmp_path_factory.mktemp("ckpt_resume_activate")
+    eng1, _ = _run_engine(spark, graph, ckpt, max_batches=3)
+    assert eng1.ckpt.last_complete_batch() == 2
+    assert not any(eng1.ckpt.has_part(b, "cuckoo") for b in range(3))
+    assert eng1.ckpt.stats(2)["frontier"] > 0  # the crawl is unfinished
+    n_seen = sum(eng1.ckpt.stats(b)["docs"] for b in range(3))
+    assert n_seen > 0  # the resumed build starts from a non-empty seen set
+
+    eng2, res = _run_engine(spark, graph, ckpt, resume=True,
+                            bloom_threshold=n_seen)
+    assert _engine_log(res) == sim["crawl_log"]
+    assert {r.url for r in res["url_seen"].collect()} == sim["url_seen"]
+    assert _engine_docs(res) == _sim_docs(sim)
+    last = eng2.ckpt.last_complete_batch()
+    assert all("cuckoo" in eng2.ckpt.stats(b) for b in range(3, last + 1))
+    assert eng2.ckpt.has_part(last, "cuckoo")
 
 
 def test_no_request_fetched_twice(spark, graph, tmp_path_factory):

@@ -1,7 +1,7 @@
 """Cuckoo-filter URL-seen tier invariants (SURVEY §2.2 D1, north-star
 "bloom-filter/cuckoo-filter URL-seen set"): ZERO false negatives ever,
 bounded false positives, deterministic bytes under any input order, and —
-the capability the bloom tier lacks — deletion that preserves the
+the capability a bloom lacks — deletion that preserves the
 no-false-negative contract for the surviving members."""
 
 from __future__ import annotations
@@ -165,35 +165,62 @@ def test_probe_shard_count_mismatch_raises(spark):
         cuckoo_probe_sharded(members, shards, "h", num_shards=8).collect()
 
 
+def test_probe_derives_num_shards(spark):
+    """num_shards=None derives the modulus from the stored shard rows —
+    callers cannot desynchronize what they never supply."""
+    members = spark.range(1_000).select(F.xxhash64("id").alias("h"))
+    shards = build_cuckoo_sharded(members, "h", num_shards=4)
+    pos = cuckoo_probe_sharded(members, shards, "h")
+    assert pos.filter(~F.col("_maybe")).count() == 0
+
+
 def test_url_seen_filter_cuckoo_matches_exact(spark):
     """The engine-facing contract: cuckoo prefilter + exact anti-join
     drops EXACTLY the seen set (bit-identical to the plain exact filter),
-    honoring dont_filter."""
-    from crawler_spark.operators.dedup import (
-        url_seen_filter,
-        url_seen_filter_cuckoo,
-    )
+    honoring dont_filter — including a dont_filter row whose URL is seen,
+    and canonicalized hashes as the crawl loop computes them."""
+    from crawler_spark.functions.urlnorm import canonicalize_col
+    from crawler_spark.operators.dedup import url_seen_filter
 
-    cand = (
-        spark.range(2_000)
-        .select(
-            F.concat(F.lit("https://s.example/p"), F.col("id")).alias("url"),
-            (F.col("id") % 97 == 0).alias("dont_filter"),
+    def page(ids):
+        return F.concat(F.lit("https://s.example/p"), ids).alias("url")
+
+    canon = F.xxhash64(canonicalize_col(F.col("url")))
+    inputs = [
+        # 2k synthetic URLs, every third seen, every 97th dont_filter
+        (
+            spark.range(2_000)
+            .select(page(F.col("id")),
+                    (F.col("id") % 97 == 0).alias("dont_filter"))
+            .withColumn("url_hash", F.xxhash64("url")),
+            spark.range(0, 2_000, 3).select(page(F.col("id")))
+            .withColumn("url_hash", F.xxhash64("url")),
+            None,
+        ),
+        # seen 0..199, candidates 150..249 plus a dont_filter probe of a
+        # seen URL
+        (
+            spark.createDataFrame(
+                [(f"http://s/{i}", False) for i in range(150, 250)]
+                + [("http://s/42", True)],
+                "url string, dont_filter boolean",
+            ).withColumn("url_hash", canon),
+            spark.createDataFrame(
+                [(f"http://s/{i}",) for i in range(200)], "url string"
+            ).withColumn("url_hash", canon),
+            {f"http://s/{i}" for i in range(200, 250)} | {"http://s/42"},
+        ),
+    ]
+    for cand, seen, expect in inputs:
+        shards = build_cuckoo_sharded(seen, "url_hash", num_shards=4)
+        got = sorted(
+            (r.url, r.dont_filter)
+            for r in url_seen_filter(spark, cand, seen, shards).collect()
         )
-        .withColumn("url_hash", F.xxhash64("url"))
-    )
-    seen = (
-        spark.range(0, 2_000, 3)
-        .select(F.concat(F.lit("https://s.example/p"), F.col("id")).alias("url"))
-        .withColumn("url_hash", F.xxhash64("url"))
-    )
-    shards = build_cuckoo_sharded(seen, "url_hash", num_shards=4)
-    got = sorted(
-        (r.url, r.dont_filter)
-        for r in url_seen_filter_cuckoo(spark, cand, seen, shards).collect()
-    )
-    want = sorted(
-        (r.url, r.dont_filter)
-        for r in url_seen_filter(spark, cand, seen, bloom=None).collect()
-    )
-    assert got == want
+        want = sorted(
+            (r.url, r.dont_filter)
+            for r in url_seen_filter(spark, cand, seen).collect()
+        )
+        assert got == want
+        if expect is not None:
+            assert {u for u, _ in got} == expect

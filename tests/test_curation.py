@@ -480,7 +480,8 @@ def test_fasttext_real_model_file_same_plan(spark):
     computes each feature's scalar weight as input·output (the supervised
     fastText score), re-buckets with the engine hash, and fasttext_score
     consumes it as a map literal — same map-side plan, no joins, same
-    shuffle count as the derived-table path."""
+    shuffle count as the derived-table path. Some fixture rows end with a
+    space, as rows of real fastText .vec dumps do."""
     import os
 
     from crawler_spark.operators.curation import (

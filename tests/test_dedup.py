@@ -4,7 +4,7 @@ near-dup operators."""
 from pyspark.sql import functions as F
 
 from crawler_spark.functions.urlnorm import canonicalize_col
-from crawler_spark.operators.bloom import build_bloom
+from crawler_spark.operators.cuckoo import build_cuckoo_sharded
 from crawler_spark.operators.dedup import (
     embedding_near_dup_lsh,
     embedding_near_dup_pairs,
@@ -45,6 +45,9 @@ def test_intra_batch_keeps_min_seq(spark):
 
 
 def test_url_seen_exact_with_and_without_bloom(spark):
+    """The exact survivor set is the same with no prefilter and with the
+    URL-seen prefilter (the sharded cuckoo tier) in front of the anti-join,
+    including a dont_filter row whose URL is already seen."""
     seen = _seen(spark, [f"http://s/{i}" for i in range(200)])
     cands = _cands(
         spark,
@@ -53,12 +56,12 @@ def test_url_seen_exact_with_and_without_bloom(spark):
     )
     expect = {f"http://s/{i}" for i in range(200, 250)} | {"http://s/42"}
 
-    no_bloom = url_seen_filter(spark, cands, seen, bloom=None)
-    assert {r.url for r in no_bloom.select("url").collect()} == expect
+    plain = url_seen_filter(spark, cands, seen)
+    assert {r.url for r in plain.select("url").collect()} == expect
 
-    bloom = build_bloom(seen, "url_hash", expected_items=200)
-    with_bloom = url_seen_filter(spark, cands, seen, bloom=bloom)
-    assert {r.url for r in with_bloom.select("url").collect()} == expect
+    shards = build_cuckoo_sharded(seen, "url_hash", num_shards=4)
+    prefiltered = url_seen_filter(spark, cands, seen, shards)
+    assert {r.url for r in prefiltered.select("url").collect()} == expect
 
 
 def test_exact_dedup(spark):

@@ -8,9 +8,9 @@ DB (middlewares.py:51). Scrapy's intra-run dupefilter (RFPDupeFilter)
 resets per invocation. ``CrawlEngine.run(recrawl=True)`` reproduces
 exactly that on the existing checkpoint — batch numbering and the
 docs/crawl_log/metrics history stay append-only — and ``evict_urls``
-adds the retention-roll capability (cuckoo tier: incremental filter
-deletion; bloom tier: stale maybe-positives resolved by the exact
-anti-join). Every run is verified byte-for-byte against the
+adds the retention-roll capability (with the cuckoo filter active:
+incremental filter deletion; below its threshold: the seen-set projection
+alone). Every run is verified byte-for-byte against the
 reference-semantics simulator seeded with the prior runs' seen set."""
 
 from __future__ import annotations
@@ -128,7 +128,7 @@ def test_cuckoo_eviction_updates_filter_in_place(spark, tmp_path_factory):
                          entries_per_page=3, dup_fraction=0.2, seed=29)
     s1 = simulate_crawl(g)
     ckpt = tmp_path_factory.mktemp("ckpt_cuckoo_evict")
-    eng1 = _mk_engine(spark, g, ckpt, use_bloom=True, filter_kind="cuckoo")
+    eng1 = _mk_engine(spark, g, ckpt, bloom_threshold=0)
     res1 = eng1.run()
     assert _engine_log(res1) == s1["crawl_log"]
     b0 = res1["last_batch"] + 1
@@ -142,7 +142,7 @@ def test_cuckoo_eviction_updates_filter_in_place(spark, tmp_path_factory):
         r.request_url for r in res1["docs"].select("request_url").collect()
     })
     evict = stored[:3]
-    eng2 = _mk_engine(spark, g, ckpt, use_bloom=True, filter_kind="cuckoo")
+    eng2 = _mk_engine(spark, g, ckpt, bloom_threshold=0)
     assert eng2.evict_urls(
         spark.createDataFrame([(u,) for u in evict], "url string")
     ) == 3

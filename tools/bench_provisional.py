@@ -96,6 +96,20 @@ def main() -> int:
         return 2
     timings = json.loads(line[-1])["queries"]
 
+    # A query can fail or be skipped inside bench.py, so its row is absent;
+    # an anchor must also have positive timings to give an inflation.
+    bad = [a for a in anchors
+           if not (timings.get(a, 0) > 0 and base.get(a, 0) > 0)]
+    missing = [t for t in targets if t not in timings]
+    for q in bad:
+        print(f"anchor {q}: absent or zero timing or baseline",
+              file=sys.stderr)
+    for q in missing:
+        print(f"target {q}: no timing row", file=sys.stderr)
+    targets = [t for t in targets if t in timings]
+    if bad or not targets:
+        return 2
+
     infl = {a: timings[a] / base[a] for a in anchors}
     med = statistics.median(infl.values())
     lo, hi = min(infl.values()), max(infl.values())
