@@ -30,6 +30,8 @@ def bounded_global_rank(
     order_exprs: list[Column],
     rank_name: str = "rank",
     rank_type: str = "int",
+    *,
+    max_rows: int,
 ) -> DataFrame:
     """Append a 1-based dense row number over ``df`` ordered by
     ``order_exprs`` (ascending lexicographic — negate numeric columns for
@@ -37,6 +39,12 @@ def bounded_global_rank(
     *order_exprs))`` but expressed as a bounded aggregate (see module
     docstring).  The order key should be a total order; any ties are
     broken by the remaining payload columns deterministically.
+
+    ``max_rows`` is the caller's documented bound on ``df``: a set larger
+    than it fails the query (``assert_true``) instead of silently growing
+    the one combiner cell.  Payload columns of MapType are rejected at
+    analysis time: the whole row is part of the sort key, and Spark cannot
+    order a map.
     """
     cols = df.columns
     kv = F.struct(
@@ -44,8 +52,12 @@ def bounded_global_rank(
         F.struct(*[F.col(c) for c in cols]).alias("p"),
     )
     arr = df.agg(F.sort_array(F.collect_list(kv)).alias("_a"))
+    within = F.assert_true(
+        F.size("_a") <= F.lit(int(max_rows)),
+        f"bounded_global_rank: input exceeds max_rows={int(max_rows)}",
+    )
     return arr.select(
-        F.posexplode("_a").alias("_pos", "_kv")
+        F.posexplode(F.when(within.isNull(), F.col("_a"))).alias("_pos", "_kv")
     ).select(
         (F.col("_pos") + 1).cast(rank_type).alias(rank_name),
         "_kv.p.*",

@@ -361,7 +361,8 @@ def dsir_weights(
     # Final rank over the k-bounded head — bounded aggregate, not an
     # unpartitioned window (functions/ranking.py).
     return bounded_global_rank(
-        topk, [(-F.col("weight_micro")).alias("_nw"), F.col(id_col)]
+        topk, [(-F.col("weight_micro")).alias("_nw"), F.col(id_col)],
+        max_rows=k,
     ).select(id_col, "weight_micro", "rank")
 
 

@@ -88,9 +88,9 @@ def url_seen_filter(
         definitely_new = None
         suspects = subject
 
-    survivors = suspects.join(
-        url_seen.select("url").distinct(), on="url", how="left_anti"
-    )
+    # No distinct() on the seen side: a left-anti join ignores duplicates
+    # there, and the dedup aggregate would cost its own shuffle.
+    survivors = suspects.join(url_seen.select("url"), on="url", how="left_anti")
     if definitely_new is not None:
         survivors = survivors.unionByName(definitely_new)
     return survivors.unionByName(bypass)

@@ -152,5 +152,6 @@ def bm25_search(
     from crawler_spark.functions.ranking import bounded_global_rank
 
     return bounded_global_rank(
-        ranked, [(-F.col("score")).alias("_ns"), F.col("doc_id")]
+        ranked, [(-F.col("score")).alias("_ns"), F.col("doc_id")],
+        max_rows=top_n,
     ).select("doc_id", "score", "rank")

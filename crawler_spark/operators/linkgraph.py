@@ -272,10 +272,13 @@ def allocate_budget(
     # partitionBy(lit(0)) idiom planned as an unpartitioned window.
     from crawler_spark.functions.ranking import bounded_global_rank
 
+    # Each salt keeps at most ``leftover`` survivors, and leftover never
+    # exceeds the budget it is the unassigned remainder of.
     bumped = bounded_global_rank(
         survivors,
         [(-F.col("_rem")).alias("_nr"), F.col("host")],
         rank_name="_pos",
+        max_rows=salt_k * max(int(total_budget), 0),
     )
 
     def _final(df, bump):

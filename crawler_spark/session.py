@@ -82,6 +82,11 @@ def get_spark(
         # Quiet the local UI; tests spin sessions up and down.
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # No Python call-site capture per DataFrame API call: with it on,
+        # every column function and transformation adds ~5 driver→JVM
+        # round trips (session lookup, conf read, origin set/clear) — more
+        # than half of the crawl loop's per-batch planning round trips.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -55,6 +55,9 @@ FETCH_COLS = (
 
 LATENCY_BYTES_PER_SEC = 51200.0  # mock latency model: 50 KiB/s
 
+# Most GET pages the mock's side-fetch map may hold on the driver.
+SIDE_MAP_MAX_ROWS = 100_000
+
 
 class MockWebFetcher:
     """Fetch = broadcast join against the (small) mock site graph on the
@@ -80,14 +83,26 @@ class MockWebFetcher:
         invisible to the scheduler — apkaakhbar.py:57-66, ambala.py:54).
         Built lazily (one graph collect) and only when the engine sees a
         registry that actually declares a gate-fetch rule; the returned
-        dict closure is picklable into the mapInPandas parse stage."""
+        dict closure is picklable into the mapInPandas parse stage.
+
+        The map is the whole GET graph, held on the driver and shipped to
+        every parse task, so it is capped: a graph with more than
+        SIDE_MAP_MAX_ROWS GET pages raises ValueError (the collect itself
+        is limited to one row past the cap)."""
         if self._side_map is None:
-            self._side_map = {
-                r.url: r.g_payload
-                for r in self.graph.filter(
+            cap = SIDE_MAP_MAX_ROWS
+            rows = (
+                self.graph.filter(
                     (F.col("method") == "GET") & (F.col("body") == "")
-                ).select("url", "g_payload").collect()
-            }
+                ).select("url", "g_payload").limit(cap + 1).collect()
+            )
+            if len(rows) > cap:
+                raise ValueError(
+                    f"MockWebFetcher.side_fetch_fn: the site graph has more "
+                    f"than SIDE_MAP_MAX_ROWS={cap} GET pages; the in-parse "
+                    "side-fetch map is driver-held — use HttpFetcher"
+                )
+            self._side_map = {r.url: r.g_payload for r in rows}
         side = self._side_map
         return side.get
 
@@ -109,28 +124,25 @@ class MockWebFetcher:
             )
             .otherwise(F.lit("ok"))
         )
-        ok = F.col("f_status") == "ok"
-        out = (
-            out.withColumn("g_payload", F.when(cookie_ok, F.col("g_payload")))
-            .withColumn("f_status", status)
-        )
+        ok = status == "ok"
         # Contract: non-ok rows carry NO response columns — a real fetcher
         # has nothing to report for a timeout/404, so the mock must not
         # leak graph-side knowledge either (keeps the two implementations
-        # byte-interchangeable; asserted in tests/test_fetcher.py).
-        for c in ("g_response_url", "g_kind", "g_payload"):
-            out = out.withColumn(c, F.when(ok, F.col(c)))
-        out = out.withColumn(
-            "g_bytes", F.when(ok, F.col("g_bytes")).otherwise(F.lit(0))
-        ).withColumn(
-            "g_latency_s",
+        # byte-interchangeable; asserted in tests/test_fetcher.py). One
+        # projection: the admitted columns, then FETCH_COLS.
+        graph_cols = set(self.graph.columns) - {"url", "method", "body"}
+        return out.select(
+            *[c for c in out.columns if c not in graph_cols],
+            F.when(ok, F.col("g_response_url")).alias("g_response_url"),
+            F.when(ok, F.col("g_kind")).alias("g_kind"),
+            F.when(ok & cookie_ok, F.col("g_payload")).alias("g_payload"),
+            F.when(ok, F.col("g_bytes")).otherwise(F.lit(0)).alias("g_bytes"),
+            status.alias("f_status"),
             F.when(
                 ok,
-                F.col("g_bytes").cast("double")
-                / F.lit(LATENCY_BYTES_PER_SEC),
-            ),
+                F.col("g_bytes").cast("double") / F.lit(LATENCY_BYTES_PER_SEC),
+            ).alias("g_latency_s"),
         )
-        return out.drop("g_fail_times", "g_required_cookie")
 
     def unpersist(self) -> None:
         self.graph.unpersist()

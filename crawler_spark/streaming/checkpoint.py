@@ -16,7 +16,9 @@ deltas — O(batch) write cost, not O(history); a real deployment compacts
 deltas periodically (Iceberg would do this natively).
 
 Reading state back from parquet each batch also truncates DataFrame lineage
-— without this, iterative loops accrete unbounded plan depth.
+— without this, iterative loops accrete unbounded plan depth. Every read
+passes the schema Spark stored in the part's own parquet footer (parsed on
+the driver), so a read plans without a schema-inference Spark job.
 """
 
 from __future__ import annotations
@@ -27,9 +29,42 @@ import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DELTA_PARTS = ("docs", "crawl_log", "metrics")
 FULL_PARTS = ("frontier",)
+
+# Footer key under which Spark's parquet writer stores the row schema (as
+# StructType JSON); Spark's own inference job reads this same key.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _parquet_files(path: str) -> list[str]:
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+
+
+def _footer_rows(path: str) -> int:
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
+
+
+def footer_schema(path: str) -> StructType | None:
+    """The Spark schema stored in the footer of one part file under
+    ``path`` — a driver-side read of a few KB, no Spark job. Every write
+    leaves at least one part file, an empty one included. None when the
+    directory has no Spark footer metadata (e.g. written by pyarrow)."""
+    import pyarrow.parquet as pq
+
+    files = _parquet_files(path)
+    if not files:
+        return None
+    meta = pq.read_metadata(files[0]).metadata or {}
+    raw = meta.get(SPARK_SCHEMA_KEY)
+    return StructType.fromJson(json.loads(raw)) if raw is not None else None
 
 
 class CrawlCheckpoint:
@@ -62,20 +97,27 @@ class CrawlCheckpoint:
     def commit(self, batch_id: int, parts: dict[str, DataFrame],
                stats: dict) -> None:
         """Write all parts, then the manifest (the atomic commit point)."""
+        self.begin(batch_id)
         self.write_parts(batch_id, parts)
         self.finalize(batch_id, stats)
 
+    def begin(self, batch_id: int) -> None:
+        """Open ``batch_id`` for part writes: clears the torn write a
+        killed run may have left (a batch dir without a manifest)."""
+        bdir = self._batch_dir(batch_id)
+        if os.path.exists(bdir) and not os.path.exists(self._manifest(batch_id)):
+            shutil.rmtree(bdir)
+        os.makedirs(bdir, exist_ok=True)
+
     def write_parts(self, batch_id: int, parts: dict[str, DataFrame]) -> None:
-        """Write all state dirs for ``batch_id`` — NOT yet committed (the
-        batch stays invisible to readers until ``finalize`` lands the
-        manifest). The parts are independent jobs over mostly-persisted
+        """Write state dirs for ``batch_id`` (opened by ``begin``) — NOT
+        yet committed (the batch stays invisible to readers until
+        ``finalize`` lands the manifest); one batch may take several
+        calls. The parts are independent jobs over mostly-persisted
         inputs; submitting them from driver threads lets Spark run them
         concurrently (idle cores otherwise wait out each tiny write in
         turn — the dominant per-batch driver overhead at small batches)."""
         bdir = self._batch_dir(batch_id)
-        if os.path.exists(bdir) and not os.path.exists(self._manifest(batch_id)):
-            shutil.rmtree(bdir)  # torn write from a killed run
-        os.makedirs(bdir, exist_ok=True)
 
         def write_one(item):
             name, df = item
@@ -86,6 +128,12 @@ class CrawlCheckpoint:
         with ThreadPoolExecutor(max_workers=max(1, len(parts))) as ex:
             list(ex.map(write_one, parts.items()))
 
+    def discard(self, batch_id: int) -> None:
+        """Delete an unfinalized batch's written parts (a batch that turned
+        out to hold nothing to commit). Never touches a committed batch."""
+        if not os.path.exists(self._manifest(batch_id)):
+            shutil.rmtree(self._batch_dir(batch_id), ignore_errors=True)
+
     def finalize(self, batch_id: int, stats: dict) -> None:
         """Land the manifest — the single atomic commit point. Only call
         after every part of the batch is fully on disk."""
@@ -94,8 +142,17 @@ class CrawlCheckpoint:
             json.dump({"batch_id": batch_id, "stats": stats}, fh)
         os.replace(tmp, self._manifest(batch_id))
 
+    def _read(self, *paths: str) -> DataFrame:
+        """``spark.read.parquet`` with the schema taken from the first
+        path's footer; falls back to Spark's inference job without one."""
+        schema = footer_schema(paths[0])
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*paths)
+
     def read_part(self, batch_id: int, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._batch_dir(batch_id), name))
+        return self._read(os.path.join(self._batch_dir(batch_id), name))
 
     def replace_part(self, batch_id: int, name: str, df: DataFrame) -> None:
         """Atomically swap a committed batch's part with new contents
@@ -119,12 +176,14 @@ class CrawlCheckpoint:
     def _evictions_root(self) -> str:
         return os.path.join(self.root, "evictions")
 
-    def append_evictions(self, df: DataFrame) -> None:
+    def append_evictions(self, df: DataFrame) -> int:
         """Append evicted URLs (url, url_hash, evicted_at_batch) — an
         append-only side log
         the seen-set derivation subtracts, so evicted URLs become
         refetchable without rewriting the docs history. Atomic per append
-        (write to tmp dir, rename into place)."""
+        (write to tmp dir, rename into place). Returns the number of rows
+        appended, read off the parquet footers; an empty append leaves
+        nothing in the log."""
         root = self._evictions_root()
         os.makedirs(root, exist_ok=True)
         n = len([d for d in os.listdir(root) if d.startswith("ev_")])
@@ -133,7 +192,12 @@ class CrawlCheckpoint:
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, final)
+        n_rows = _footer_rows(tmp)
+        if n_rows == 0:
+            shutil.rmtree(tmp)
+        else:
+            os.rename(tmp, final)
+        return n_rows
 
     def read_evictions(self) -> DataFrame | None:
         root = self._evictions_root()
@@ -145,7 +209,7 @@ class CrawlCheckpoint:
         )
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return self._read(*paths)
 
     def prune_part(self, name: str, upto_batch: int) -> None:
         """Delete stale copies of a SNAPSHOT part (the URL-seen filter)
@@ -196,7 +260,7 @@ class CrawlCheckpoint:
         paths = self.delta_paths(name, upto_batch)
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return self._read(*paths)
 
     # -- delta compaction (the Iceberg-snapshot equivalent) -----------------
 
@@ -264,13 +328,6 @@ class CrawlCheckpoint:
     def part_rows(self, batch_id: int, name: str) -> int:
         """Exact row count of a written part from parquet footer metadata —
         pure driver-side file reads, no Spark job. Lets the driver loop
-        test frontier emptiness off the manifest instead of running an
-        isEmpty() job per batch."""
-        import pyarrow.parquet as pq
-
-        d = os.path.join(self._batch_dir(batch_id), name)
-        return sum(
-            pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
+        test frontier emptiness off the manifest, and the batch record its
+        admitted/docs counts, without a count() job each."""
+        return _footer_rows(os.path.join(self._batch_dir(batch_id), name))

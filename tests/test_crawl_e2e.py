@@ -22,7 +22,9 @@ from crawler_spark.streaming.crawl_loop import CrawlEngine
 
 
 def _run_engine(spark, graph, ckpt_dir, resume=False, max_batches=1000,
-                compact_every=0, **kw):
+                compact_every=0, batch_jobs=None, **kw):
+    """``batch_jobs``: a dict to fill with {batch: Spark jobs it ran} for
+    every committed batch (exact ids from the DAG scheduler's counter)."""
     eng = CrawlEngine(
         spark,
         site_graph=site_graph_df(spark, graph),
@@ -34,6 +36,18 @@ def _run_engine(spark, graph, ckpt_dir, resume=False, max_batches=1000,
         compact_every=compact_every,
         **kw,
     )
+    if batch_jobs is not None:
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        run_batch = eng.run_batch
+
+        def counted(b, frontier):
+            j0 = dag.nextJobId()
+            out = run_batch(b, frontier)
+            if out is not None:
+                batch_jobs[b] = dag.nextJobId() - j0
+            return out
+
+        eng.run_batch = counted
     return eng, eng.run(max_batches=max_batches, resume=resume)
 
 
@@ -125,9 +139,21 @@ def _engine_metrics(res) -> list[tuple]:
     ]
 
 
+# Most Spark jobs one committed micro-batch of the fixture crawl may run.
+# Every job is crawl work: the concurrent part writes and the shuffles,
+# broadcasts and cache fills under them. Counts, schemas and emptiness
+# come from parquet footers on the driver, never from extra actions.
+# Measured: 24-25 per batch (42-44 before footer counts); the headroom
+# covers cache fills that two concurrent writes may both start.
+BATCH_JOB_CEILING = 28
+
+
 def test_crawl_matches_simulator(spark, graph, sim, tmp_path_factory):
+    import os
+
     ckpt = tmp_path_factory.mktemp("ckpt_parity")
-    _, res = _run_engine(spark, graph, ckpt)
+    jobs = {}
+    eng, res = _run_engine(spark, graph, ckpt, batch_jobs=jobs)
 
     # 1. ordered crawl log byte-for-byte
     assert _engine_log(res) == sim["crawl_log"]
@@ -144,6 +170,24 @@ def test_crawl_matches_simulator(spark, graph, sim, tmp_path_factory):
     assert _engine_metrics(res) == sorted(sim["metrics"])
     # and the fixture exercised real dedup drops
     assert any(m[3] > 0 for m in sim["metrics"])
+
+    # 5. Spark jobs per committed batch within BATCH_JOB_CEILING, and every
+    #    manifest count equals the row count of that batch's part
+    last = res["last_batch"]
+    assert sorted(jobs) == list(range(last + 1))
+    assert max(jobs.values()) <= BATCH_JOB_CEILING, jobs
+
+    def rows(b, name):
+        return spark.read.parquet(
+            os.path.join(str(ckpt), f"batch_{b:05d}", name)).count()
+
+    for b in range(last + 1):
+        stats = eng.ckpt.stats(b)
+        assert stats["admitted"] == rows(b, "crawl_log") > 0
+        assert stats["docs"] == rows(b, "docs")
+        assert stats["frontier"] == rows(b, "frontier")
+    # no uncommitted batch directory is left behind
+    assert not os.path.exists(os.path.join(str(ckpt), f"batch_{last + 1:05d}"))
 
     # sanity: the fixture actually exercised something non-trivial
     assert len(sim["crawl_log"]) > 30

@@ -424,3 +424,23 @@ def test_paced_fetcher_requires_admission_columns(spark):
     )
     with _pytest.raises(ValueError, match="host_rank"):
         HttpFetcher(paced=True).fetch(adf)
+
+
+def test_mock_side_fetch_map_is_capped(spark, monkeypatch):
+    """The mock's in-parse side-fetch map is the whole GET graph collected
+    to the driver: above its row cap it raises instead of collecting."""
+    from crawler_spark.sources import fetcher
+    from crawler_spark.sources.mock_web import site_graph_df
+
+    graph = build_site_graph(n_sites=1, cats_per_site=1, pages_per_cat=1,
+                             entries_per_page=3, seed=3)
+    gdf = site_graph_df(spark, graph)
+    n_get = gdf.filter("method = 'GET' AND body = ''").count()
+    assert n_get > 2
+    monkeypatch.setattr(fetcher, "SIDE_MAP_MAX_ROWS", 2)
+    with pytest.raises(ValueError, match="SIDE_MAP_MAX_ROWS=2"):
+        MockWebFetcher(spark, gdf).side_fetch_fn()
+    monkeypatch.setattr(fetcher, "SIDE_MAP_MAX_ROWS", n_get)
+    side = MockWebFetcher(spark, gdf).side_fetch_fn()
+    url = gdf.filter("method = 'GET' AND body = ''").first().url
+    assert side(url) is not None
