@@ -239,8 +239,8 @@ def _calibration_stamp() -> dict:
     regime this bench ran in, stamped into the JSON so the recorded
     artifact carries its own noise evidence (the sandbox VM's neighbor
     interference inflates timings 2-25×; see BENCH/PROTOCOL.md). ~10 s
-    overhead; only taken for full-suite runs (the gated harnesses do
-    their own gating around subset/frontier runs)."""
+    overhead; only taken for full-suite runs (the scaling harness gates
+    its frontier-only runs itself)."""
     try:
         from tools.bench_scaling import calibrate, load_cal_best
 
@@ -274,7 +274,7 @@ def main() -> None:
     # Default ×10 (6M URLs at sf0.1): at mult=1 the pipeline finishes in
     # ~2 s and per-job fixed overhead (~1-2 s) dominates, under-reporting
     # the frontier's compute-bound throughput by 3-4×. The scaling harness
-    # overrides to 40; checksums are mult-specific (different candidate
+    # runs ×20; checksums are mult-specific (different candidate
     # sets), so compare like against like.
     mult = int(os.environ.get("SPARK_GRAFT_FRONTIER_MULT", "10"))
 
@@ -282,16 +282,11 @@ def main() -> None:
     # BENCH/BASELINE.md row names stay stable across the round-5
     # repackaging of the driver-facing queries() into composites.
     qs = entrymod.queries_all()
-    # SPARK_GRAFT_QUERIES=a,b,c restricts the suite (addendum re-measures
-    # of a few queries fit a short clean window a full sweep would miss)
-    subset = os.environ.get("SPARK_GRAFT_QUERIES")
-    names = ([q for q in subset.split(",") if q] if subset
-             else BENCH_QUERIES)
-    cal_pre = ({} if (frontier_only or subset) else _calibration_stamp())
+    cal_pre = {} if frontier_only else _calibration_stamp()
     timings: dict[str, float] = {}
     total = 0.0
     if not frontier_only:
-        for name in names:
+        for name in BENCH_QUERIES:
             # Construction is inside the timed window: iterative operators
             # (host_pagerank) materialize supersteps eagerly at build time,
             # and excluding that work would under-report them.
@@ -301,15 +296,12 @@ def main() -> None:
             timings[name] = round(dt, 3)
             total += dt
 
-    skip_frontier = os.environ.get("SPARK_GRAFT_NO_FRONTIER") == "1"
-    frontier = ({} if skip_frontier
-                else frontier_throughput(spark, sf_dir, mult=mult))
-    total += frontier.get("sec", 0.0)
-    crawl = ({} if frontier_only or skip_frontier or subset
-             else crawl_bench(spark))
+    frontier = frontier_throughput(spark, sf_dir, mult=mult)
+    total += frontier["sec"]
+    crawl = {} if frontier_only else crawl_bench(spark)
     total += crawl.get("sec", 0.0)
 
-    cal_post = ({} if (frontier_only or subset) else _calibration_stamp())
+    cal_post = {} if frontier_only else _calibration_stamp()
     out = {
         "metric": "headline_suite_plus_frontier_wall_sec",
         "value": round(total, 3),

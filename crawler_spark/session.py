@@ -18,6 +18,34 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 # Minimum free tmpfs space before we trust /dev/shm with shuffle files.
 SHM_MIN_FREE_BYTES = 16 << 30
 
+# Driver heap ceiling; the default is also capped at half the machine.
+DRIVER_MEM_MAX_MB = 24 << 10
+
+# cgroup v2 memory limit of this process's container, when it has one.
+CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+
+
+def _memory_bytes() -> int:
+    """Physical memory, lowered to the cgroup's ``memory.max`` when that
+    file is readable and holds a number (``max`` means no limit)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open(CGROUP_MEMORY_MAX) as fh:
+            limit = fh.read().strip()
+    except OSError:
+        return phys
+    return min(phys, int(limit)) if limit.isdigit() else phys
+
+
+def driver_mem() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    ``min(24g, ½ × memory)`` — a heap larger than the machine lets the JVM
+    grow until the kernel kills it, where a bounded heap garbage-collects."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    return f"{min(DRIVER_MEM_MAX_MB, (_memory_bytes() // 2) >> 20)}m"
+
 
 def _pick_local_dir() -> str:
     """SPARK_GRAFT_LOCAL_DIR if set; else '/dev/shm/spark-local,/tmp' when
@@ -60,10 +88,7 @@ def get_spark(
         # PySpark's 1g default heap cannot hold local[32]'s concurrent task
         # buffers; size for the machine (overridable per environment — on a
         # real cluster this is executor memory via spark-submit).
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        )
+        .config("spark.driver.memory", driver_mem())
         # Shuffle/spill files on tmpfs when available: this sandbox's /tmp
         # is a virtual disk whose bandwidth caps shuffle-heavy scaling (on
         # a real cluster this is local NVMe per executor). tmpfs competes

@@ -50,19 +50,11 @@ def simulate_crawl(
 
     Returns {crawl_log: [(batch_id, url)...] in canonical order,
              url_seen: set, docs: {doc_id: doc}, fetch_count: int,
-             batches: int,
+             batches: int (the engine's last_batch + 1 — neither side
+                           commits a batch that admits nothing),
              metrics: [(batch_id, host, scheduled, deduped, fetched, bytes,
                         max_depth)...]} — the A4 per-host fetch metrics the
     engine must reproduce exactly (measured, never fabricated).
-
-    Termination asymmetry under ``url_filter`` (documented, not a parity
-    bug): when the filter empties a batch's frontier the simulator breaks
-    BEFORE counting that batch, while the engine enters ``run_batch`` (the
-    filter runs inside it) and winds down through an empty no-op batch.
-    Neither side emits log/doc/metrics rows for such a batch — every
-    guarded oracle row compares identically — but ``batches``/
-    ``last_batch`` counters are NOT part of the parity contract and must
-    not be compared across the two implementations.
 
     ``autothrottle`` (W4, settings.py:72-82): pass a dict (empty = Scrapy
     defaults; keys start_delay / max_delay / target_concurrency /

@@ -34,6 +34,12 @@ from pyspark.sql.types import StructType
 DELTA_PARTS = ("docs", "crawl_log", "metrics")
 FULL_PARTS = ("frontier",)
 
+# Every part write and compaction coalesces to this many files: deltas are
+# O(batch), and a 32-way write of a few hundred rows is pure small-file
+# overhead. A 10^10-URL deployment raises it (or switches the seam to
+# Iceberg appends); semantics are unchanged either way.
+WRITE_PARTITIONS = 4
+
 # Footer key under which Spark's parquet writer stores the row schema (as
 # StructType JSON); Spark's own inference job reads this same key.
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -68,15 +74,9 @@ def footer_schema(path: str) -> StructType | None:
 
 
 class CrawlCheckpoint:
-    """``write_partitions`` coalesces each per-batch delta before writing —
-    deltas are O(batch), and a 32-way write of a few hundred rows is pure
-    small-file overhead. A 10^10-URL deployment raises it (or switches the
-    seam to Iceberg appends); semantics are unchanged either way."""
-
-    def __init__(self, spark: SparkSession, root: str, write_partitions: int = 4):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.write_partitions = write_partitions
         os.makedirs(root, exist_ok=True)
 
     def _batch_dir(self, batch_id: int) -> str:
@@ -121,7 +121,7 @@ class CrawlCheckpoint:
 
         def write_one(item):
             name, df = item
-            df.coalesce(self.write_partitions).write.mode("overwrite").parquet(
+            df.coalesce(WRITE_PARTITIONS).write.mode("overwrite").parquet(
                 os.path.join(bdir, name)
             )
 
@@ -166,7 +166,7 @@ class CrawlCheckpoint:
         for stale in (tmp, old):
             if os.path.exists(stale):
                 shutil.rmtree(stale)
-        df.coalesce(self.write_partitions).write.mode("overwrite").parquet(tmp)
+        df.coalesce(WRITE_PARTITIONS).write.mode("overwrite").parquet(tmp)
         os.rename(final, old)
         os.rename(tmp, final)
         shutil.rmtree(old)
@@ -310,9 +310,7 @@ class CrawlCheckpoint:
         tmp_out = out + ".tmp"
         if os.path.exists(tmp_out):
             shutil.rmtree(tmp_out)
-        df.coalesce(max(self.write_partitions, 1)).write.mode(
-            "overwrite"
-        ).parquet(tmp_out)
+        df.coalesce(WRITE_PARTITIONS).write.mode("overwrite").parquet(tmp_out)
         if os.path.exists(out):
             shutil.rmtree(out)
         os.rename(tmp_out, out)

@@ -862,29 +862,27 @@ class CrawlEngine:
         (evict_urls) — produce documents. Batch numbering and the docs /
         crawl_log / metrics history stay append-only across runs."""
         last = self.ckpt.last_complete_batch() if (resume or recrawl) else None
-        if last is not None and recrawl:
-            b = last + 1
-            self._run_start_batch = b
-            frontier, n_frontier = self._seed_frontier(batch_id=b)
-            self._seen_total = sum(
-                self.ckpt.stats(i).get("docs", 0) for i in range(last + 1)
-            )
-        elif last is not None:
-            b = last + 1
-            frontier = self.ckpt.read_part(last, "frontier")
-            # Footer row count: also covers manifests written before the
-            # "frontier" stat existed.
-            n_frontier = self.ckpt.part_rows(last, "frontier")
-            self._seen_total = sum(
-                self.ckpt.stats(i).get("docs", 0) for i in range(last + 1)
-            )
-            # The interrupted run's dupefilter scope (0 for pre-recrawl
-            # checkpoints).
-            self._run_start_batch = self.ckpt.stats(last).get("run_start", 0)
-        else:
+        if last is None:
             b = 0
             self._run_start_batch = 0
             frontier, n_frontier = self._seed_frontier()
+        else:
+            b = last + 1
+            self._seen_total = sum(
+                self.ckpt.stats(i).get("docs", 0) for i in range(b)
+            )
+            if recrawl:
+                self._run_start_batch = b
+                frontier, n_frontier = self._seed_frontier(batch_id=b)
+            else:
+                frontier = self.ckpt.read_part(last, "frontier")
+                # Footer row count: also covers manifests written before
+                # the "frontier" stat existed.
+                n_frontier = self.ckpt.part_rows(last, "frontier")
+                # The interrupted run's dupefilter scope (0 for
+                # pre-recrawl checkpoints).
+                self._run_start_batch = self.ckpt.stats(last).get(
+                    "run_start", 0)
         max_batches = b + max_batches
         while b < max_batches and n_frontier > 0:
             nxt = self.run_batch(b, frontier)

@@ -188,6 +188,8 @@ def test_crawl_matches_simulator(spark, graph, sim, tmp_path_factory):
         assert stats["frontier"] == rows(b, "frontier")
     # no uncommitted batch directory is left behind
     assert not os.path.exists(os.path.join(str(ckpt), f"batch_{last + 1:05d}"))
+    # and the committed batches are the simulator's batches
+    assert last + 1 == sim["batches"]
 
     # sanity: the fixture actually exercised something non-trivial
     assert len(sim["crawl_log"]) > 30
@@ -195,6 +197,24 @@ def test_crawl_matches_simulator(spark, graph, sim, tmp_path_factory):
     assert any(
         s[0] == "image" for d in _sim_docs(sim) for s in d["spans"]
     )
+
+
+def test_url_filter_batch_count_matches_simulator(spark):
+    """When the URL filter empties a frontier, the engine discards that
+    batch and the simulator stops before counting it: both report the
+    same number of batches (the cached oracle crawl, no extra run)."""
+    from pyspark.sql import functions as F
+
+    from crawler_spark.oracle_crawl import (
+        URL_FILTER_CFG,
+        engine_url_filter_log,
+        fixture_graph,
+    )
+
+    log = engine_url_filter_log(spark)
+    engine_batches = log.agg(F.max("batch_id")).first()[0] + 1
+    sim_uf = simulate_crawl(fixture_graph(), url_filter=URL_FILTER_CFG)
+    assert engine_batches == sim_uf["batches"]
 
 
 def test_prioritized_crawl_matches_simulator(spark, graph, sim,
